@@ -324,6 +324,7 @@ def run_build_corpus(spark, pages: DataFrame, output_dir: str,
     """Driver wrapper: composed build + checkpointed bucket-wise write
     (resume skips done buckets) + per-bucket lineage audit rows keyed
     by run_id (idempotent via dynamic partition overwrite)."""
+    from social_media_pii_scrubber_spark.plans.audit import write_audit
     from social_media_pii_scrubber_spark.plans.checkpoint import (
         write_with_checkpoints,
     )
@@ -341,11 +342,5 @@ def run_build_corpus(spark, pages: DataFrame, output_dir: str,
                  F.sum("n_tok").alias("tokens_kept"))
             .withColumn("run_id", F.lit(run_id))
         )
-        (
-            lineage.repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id")
-            .parquet(audit_path)
-        )
+        write_audit(lineage, audit_path)
     return result

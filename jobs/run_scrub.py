@@ -28,7 +28,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from social_media_pii_scrubber_spark.config import ScrubConfig
-from social_media_pii_scrubber_spark.plans.audit import append_audit, audit_run_exists
+from social_media_pii_scrubber_spark.plans.audit import append_audit
 from social_media_pii_scrubber_spark.plans.checkpoint import write_with_checkpoints
 from social_media_pii_scrubber_spark.plans.pipeline import filter_scrub_pipeline
 from social_media_pii_scrubber_spark.session import get_spark
@@ -82,21 +82,18 @@ def main(argv=None) -> None:
     stats = write_with_checkpoints(
         result.df, args.output, n_buckets=args.buckets
     )
-    # Audit is overwrite-per-run_id (idempotent). A fully-resumed run that
-    # wrote nothing and already has its audit partition skips the extra
-    # pipeline pass the aggregation would cost.
+    # The audit aggregates the written output (a scan of the sink, not
+    # another pipeline pass); overwrite-per-run_id keeps it idempotent.
+    # The schema is given because an empty corpus writes no data file.
     audit_path = args.audit or f"{args.output}/audit"
-    wrote_audit = bool(stats["written_buckets"]) or not audit_run_exists(
-        spark, audit_path, args.run_id
-    )
-    if wrote_audit:
-        append_audit(result.df, audit_path, args.run_id, n_buckets=args.buckets)
+    output = spark.read.schema(result.df.schema).parquet(f"{args.output}/data")
+    append_audit(output, audit_path, args.run_id, n_buckets=args.buckets)
     print(f"run {args.run_id}: wrote buckets {len(stats['written_buckets'])}, "
           f"resumed past {len(stats['skipped_buckets'])}")
     # Observation.get BLOCKS until an action runs on the observed frame;
-    # a fully-resumed run executes none, so only read it when one did.
-    ran_action = bool(stats["written_buckets"]) or wrote_audit
-    if result.observation is not None and ran_action:
+    # the writer runs one (its single materialization) only when it had
+    # buckets to write.
+    if result.observation is not None and stats["written_buckets"]:
         print(f"audit metrics: {result.observation.get}")
     spark.stop()
 

@@ -170,8 +170,9 @@ def top_bigram_fraction_expr(text: Column) -> Column:
     ``words_expr(text)`` four times (zip_with's two arguments, the
     slice length, the denominator) and codegen CSE does not dedupe the
     repeated split(trim(lower)) trees, so every call paid the
-    tokenization ~4×. The bound slot makes it once; arithmetic is
-    unchanged, values bit-identical to the SQL twin.
+    tokenization for four references plus the n>=2 guard (~5×). The
+    bound slot makes it once; arithmetic is unchanged, values
+    bit-identical to the SQL twin.
     """
     from .text import let_expr
 

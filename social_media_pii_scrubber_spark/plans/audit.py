@@ -7,9 +7,10 @@ metrics to an Iceberg audit table". Two complementary channels:
   metrics ride along the action that writes the output; reference
   analogue: the log-and-count completion lines,
   /root/reference/SMParser/smparserbase.py:168-170);
-- per-bucket lineage rows via one aggregation over the scored frame:
-  rows in/kept/dropped per url-hash bucket, appended to a parquet
-  (Iceberg in production) audit table keyed by run_id.
+- per-bucket lineage rows via one aggregation over the written output
+  (a scan of the sink, not another pipeline pass): rows
+  in/kept/dropped per url-hash bucket, appended to a parquet (Iceberg
+  in production) audit table keyed by run_id.
 
 Both are deterministic and idempotent per (run_id, bucket).
 """
@@ -62,25 +63,22 @@ def bucket_lineage(scored: DataFrame, run_id: str, n_buckets: int = 256,
 
 def append_audit(scored: DataFrame, audit_path: str, run_id: str,
                  n_buckets: int = 256) -> None:
-    """Write this run's lineage rows, idempotent per run_id.
+    """Write this run's lineage rows (``bucket_lineage`` of ``scored``,
+    normally the job's written output read back)."""
+    write_audit(bucket_lineage(scored, run_id, n_buckets), audit_path)
+
+
+def write_audit(rows: DataFrame, audit_path: str) -> None:
+    """Write audit rows carrying a ``run_id`` column, idempotent per run_id.
 
     Dynamic partition overwrite on run_id: re-running the same run_id
     (checkpoint resume, retry) REPLACES that run's audit rows instead of
     appending duplicates; other run_ids are untouched.
     """
     (
-        bucket_lineage(scored, run_id, n_buckets)
-        .repartition(1)  # audit rows are tiny: one file per run partition
+        rows.repartition(1)  # audit rows are tiny: one file per run partition
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("run_id")
         .parquet(audit_path)
     )
-
-
-def audit_run_exists(spark, audit_path: str, run_id: str) -> bool:
-    """Cheap existence probe for a run's audit partition (any Hadoop FS)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(f"{audit_path}/run_id={run_id}")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(path))

@@ -20,6 +20,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.components import _cut_lineage
 from .partitioning import url_bucket_expr
 
 
@@ -53,17 +54,27 @@ def write_with_checkpoints(
 ) -> dict:
     """Write df partitioned by url-hash bucket, checkpointing progress.
 
-    Buckets are grouped into batches (one write job per batch — at
-    scale you trade job overhead vs blast radius). ``fail_after``
-    injects a crash after N batches (test hook for resume).
+    The pending buckets of ``df`` are computed in ONE pass and
+    materialized (localCheckpoint); the batches are then cut from that
+    materialized frame, one write job per batch (at scale you trade job
+    overhead vs blast radius). Cutting them from ``df`` itself would
+    re-run its whole plan per batch: a bucket filter above ``observe()``
+    does not push down to the scan. ``fail_after`` injects a crash after
+    N batches (test hook for resume); the manifest stays the recovery
+    path if the materialized blocks are lost.
 
     Returns {written_buckets, skipped_buckets}.
     """
     manifest = CheckpointManifest(output_dir)
     done = manifest.done_buckets()
-    bucketed = df.withColumn("bucket", url_bucket_expr(F.col(url_col), n_buckets))
-
     pending = [b for b in range(n_buckets) if b not in done]
+    if not pending:
+        return {"written_buckets": [], "skipped_buckets": sorted(done)}
+    bucketed = df.withColumn("bucket", url_bucket_expr(F.col(url_col), n_buckets))
+    if done:
+        bucketed = bucketed.filter(F.col("bucket").isin(pending))
+    bucketed = _cut_lineage(bucketed, "local")
+
     written: list[int] = []
     batches = [
         pending[i : i + buckets_per_batch]

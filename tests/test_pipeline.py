@@ -141,6 +141,53 @@ class TestCheckpointResume:
         got = spark.read.parquet(f"{out}/data").count()
         assert got == total  # no loss, no duplication
 
+    def test_batches_run_the_pipeline_once(self, spark, pages, tmp_path):
+        """The bucket batches are cut from one materialized pass: a UDF
+        under the pipeline's observe() sees each row once, not once per
+        batch (a bucket filter above observe() cannot reach the scan)."""
+        import pandas as pd
+
+        seen = spark.sparkContext.accumulator(0)
+
+        @F.pandas_udf("string")
+        def counted(text: pd.Series) -> pd.Series:
+            seen.add(len(text))
+            return text
+
+        out = str(tmp_path / "out")
+        df = filter_scrub_pipeline(pages.withColumn("text", counted("text")),
+                                   CFG, with_observe=True).df
+        write_with_checkpoints(df, out, n_buckets=8, buckets_per_batch=2)
+        assert seen.value == spark.read.parquet(f"{out}/data").count() > 0
+
+    def test_audit_from_output_after_resume(self, spark, pages, tmp_path):
+        """After a crash and a resume, the audit built from the written
+        output equals the lineage of the scored frame, and the resumed
+        run's Observation covers the whole window exactly once."""
+        from social_media_pii_scrubber_spark.plans.audit import (
+            AUDIT_COLUMNS, append_audit, bucket_lineage,
+        )
+
+        out, audit = str(tmp_path / "out"), str(tmp_path / "audit")
+        first = filter_scrub_pipeline(pages, CFG, with_observe=True)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            write_with_checkpoints(first.df, out, n_buckets=8,
+                                   buckets_per_batch=2, fail_after=2)
+        # a restarted job builds its plan (and its Observation) afresh
+        resumed = filter_scrub_pipeline(pages, CFG, with_observe=True)
+        res = write_with_checkpoints(resumed.df, out, n_buckets=8,
+                                     buckets_per_batch=2)
+        assert res["skipped_buckets"] and res["written_buckets"]
+        append_audit(spark.read.parquet(f"{out}/data"), audit, "r1", n_buckets=8)
+
+        got = sorted(spark.read.parquet(audit).select(AUDIT_COLUMNS).collect())
+        want = sorted(bucket_lineage(resumed.df, "r1", n_buckets=8).collect())
+        assert got == want
+        obs = resumed.observation.get
+        assert obs["rows_in_window"] == sum(r.rows_in for r in got)
+        assert obs["rows_kept"] == sum(r.rows_kept for r in got)
+        assert obs["rows_dropped"] == sum(r.rows_dropped for r in got)
+
 
 class TestCorpusStats:
     def test_approx_percentiles_close_to_exact(self, spark, sf_dir):
