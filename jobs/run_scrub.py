@@ -31,7 +31,7 @@ from social_media_pii_scrubber_spark.config import ScrubConfig
 from social_media_pii_scrubber_spark.plans.audit import append_audit
 from social_media_pii_scrubber_spark.plans.checkpoint import write_with_checkpoints
 from social_media_pii_scrubber_spark.plans.pipeline import filter_scrub_pipeline
-from social_media_pii_scrubber_spark.session import get_spark
+from social_media_pii_scrubber_spark.session import get_spark, stop_session
 from social_media_pii_scrubber_spark.sources.tables import load_iceberg_or_parquet
 from social_media_pii_scrubber_spark.sources.webpages import generate_webpages
 
@@ -95,7 +95,7 @@ def main(argv=None) -> None:
     # buckets to write.
     if result.observation is not None and stats["written_buckets"]:
         print(f"audit metrics: {result.observation.get}")
-    spark.stop()
+    stop_session(spark)
 
 
 if __name__ == "__main__":
