@@ -82,20 +82,17 @@ def stop_session(spark: SparkSession) -> None:
     ago the last Python task reported: dead time at the end of a job and
     run-to-run noise in its wall time. Here the shutdown is requested
     first and one empty update from the JVM wakes the handler at once.
-    Falls back to a plain stop when those pyspark internals are absent.
     """
     sc = spark.sparkContext
-    server = getattr(sc, "_accumulatorServer", None)
-    jacc = getattr(sc, "_javaAccumulator", None)
-    if jacc is not None and hasattr(server, "server_shutdown"):
-        closer = threading.Thread(target=server.shutdown)
-        closer.start()
-        while closer.is_alive() and not server.server_shutdown:
-            time.sleep(0.001)
-        try:
-            # the handler reads this empty update, sees the shutdown, returns
-            jacc.merge(jacc.copyAndReset())
-        except Py4JError:
-            pass  # the handler had already returned, or never connected
-        closer.join()
+    server, jacc = sc._accumulatorServer, sc._javaAccumulator
+    closer = threading.Thread(target=server.shutdown)
+    closer.start()
+    while closer.is_alive() and not server.server_shutdown:
+        time.sleep(0.001)
+    try:
+        # the handler reads this empty update, sees the shutdown, returns
+        jacc.merge(jacc.copyAndReset())
+    except Py4JError:
+        pass  # the handler had already returned, or never connected
+    closer.join()
     spark.stop()
