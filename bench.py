@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 
 from social_media_pii_scrubber_spark.config import ScrubConfig
 from social_media_pii_scrubber_spark.operators import dedup as DD
+from social_media_pii_scrubber_spark.operators.hashing import XXHASH64
 from social_media_pii_scrubber_spark.operators import similarity as SIM
 from social_media_pii_scrubber_spark.plans.pipeline import filter_scrub_pipeline
 from social_media_pii_scrubber_spark.session import get_spark
@@ -255,7 +256,7 @@ def main() -> None:
 
     # q3: exact dedup at corpus scale
     timed("q3_exact_dedup", lambda: _count(
-        DD.exact_dedup_fast(pages, "text", "url")))
+        DD.exact_dedup(pages, "text", "url", family=XXHASH64)))
 
     # q4: minhash LSH candidate pairs over the testdata documents
     timed("q4_minhash_lsh", lambda: _count(
@@ -264,7 +265,7 @@ def main() -> None:
     # q4b: PRODUCTION minhash profile — xxhash64, 128 hashes / 16 bands
     # (the config the recall test validates; no hex-string shuffles)
     timed("q4b_minhash_lsh_wide", lambda: _count(
-        DD.lsh_candidate_pairs_fast(docs, "text", "doc_id")))
+        DD.lsh_candidate_pairs(docs, "text", "doc_id", family=XXHASH64)))
 
     # q4c: the full production near-dup chain (wide LSH → jaccard verify
     # → connected components → keep flags)
@@ -358,10 +359,10 @@ def main() -> None:
         tgt = pages.filter(F.pmod(F.xxhash64("url"), F.lit(100)) < 1)
         src_fit = pages.filter(F.pmod(F.xxhash64("url"), F.lit(10)) < 1)
         ratio = DSR.log_ratio(
-            DSR.bucket_distribution_fast(tgt, "text"),
-            DSR.bucket_distribution_fast(src_fit, "text"),
+            DSR.bucket_distribution(tgt, "text", family=XXHASH64),
+            DSR.bucket_distribution(src_fit, "text", family=XXHASH64),
         )
-        _count(DSR.dsir_weights_fast(pages, "text", "url", ratio))
+        _count(DSR.dsir_weights(pages, "text", "url", ratio, family=XXHASH64))
     timed("q10_dsir_weights", _q10)
 
     # q11: supervised quality-classifier inference over the 1M-page

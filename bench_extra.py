@@ -1,12 +1,13 @@
-"""Extra (non-frozen) benchmarks: per-stage q16 breakdown + noop-sink
-isolation per guide §1.4. NOT part of the driver contract — bench.py is
-the frozen measurement harness; this file exists so optimization work
-can localize cost to a stage and prove before/after deltas.
+"""Extra (non-frozen) benchmarks: the heavy queries timed one by one.
+bench.py is the frozen measurement harness; this file exists so
+optimization work can localize cost to a query and prove before/after
+deltas. Per-stage times of the corpus
+build come from the traced benchmark run
+(``perfbench/run.py --workload corpus_build --trace 1``:
+``build_corpus.stage_pct.*`` / ``stage_rows.*``).
 
 Usage:
-  python bench_extra.py stages   # q16 build_corpus per-stage wall times
-  python bench_extra.py queries  # noop-isolated heavy queries
-  python bench_extra.py plans    # dump .explain('formatted') to plans/r07
+  python bench_extra.py queries  # heavy queries, one count each
 """
 
 from __future__ import annotations
@@ -20,24 +21,18 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from social_media_pii_scrubber_spark.config import ScrubConfig
 from social_media_pii_scrubber_spark.session import get_spark
 from social_media_pii_scrubber_spark.sources.webpages import generate_webpages
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 WEB_ROWS = int(os.environ.get("BENCH_WEB_ROWS", "1000000"))
-CFG = ScrubConfig()
 
 
 def _steal():
     with open("/proc/stat") as f:
         vals = [int(x) for x in f.readline().split()[1:]]
     return (vals[7] if len(vals) > 7 else 0), sum(vals)
-
-
-def noop(df):
-    df.write.format("noop").mode("overwrite").save()
 
 
 def timeit(name, fn, out):
@@ -57,106 +52,6 @@ def _corpus(spark):
     return pages, n
 
 
-def _bpages(spark, pages, n_pages):
-    bc_rows = int(os.environ.get("BENCH_CORPUS_BUILD_ROWS", "100000"))
-    mod = max(round(n_pages / bc_rows), 1)
-    return pages.filter(F.pmod(F.xxhash64("url"), F.lit(mod)) < 1) \
-        .withColumn("page_id",
-                    F.regexp_extract("url", "/p/([0-9]+)$", 1).cast("bigint"))
-
-
-def stage_frames(bpages, wmap):
-    """Reproduce build_corpus stage by stage, yielding (name, df)."""
-    from social_media_pii_scrubber_spark.functions import quality as Q
-    from social_media_pii_scrubber_spark.functions import scrub as S
-    from social_media_pii_scrubber_spark.functions import text as T
-    from social_media_pii_scrubber_spark.functions import toxicity as TX
-    from social_media_pii_scrubber_spark.functions import urls as U
-    from social_media_pii_scrubber_spark.operators import classifier as CL
-    from social_media_pii_scrubber_spark.operators import components as CC
-    from social_media_pii_scrubber_spark.operators import dedup as DD
-    from social_media_pii_scrubber_spark.operators import hosts as HST
-    from social_media_pii_scrubber_spark.operators import lines as LN
-    from social_media_pii_scrubber_spark.operators import packing as PK
-    from social_media_pii_scrubber_spark.operators import sampling as SA
-    from social_media_pii_scrubber_spark.operators.components import dedup_keep_list
-
-    id_col = "page_id"
-    i = F.col(id_col)
-    budgets = {"en": 2_000_000, "de": 600_000, "fr": 600_000, "es": 600_000}
-
-    c = bpages.select(
-        i.alias(id_col),
-        U.url_canonicalize_expr(F.col("url")).alias("canonical_url"),
-        F.col("text").alias("text"),
-        F.col("lang").alias("lang"),
-    )
-    first = c.groupBy("canonical_url").agg(F.min(id_col).alias(id_col))
-    c = c.join(first, on=["canonical_url", id_col])
-    yield "s0_canon_dedup", c
-
-    ld = LN.line_dedup(c, "text", id_col)
-    d = c.drop("text").join(ld, on=id_col).withColumnRenamed("text_deduped", "text")
-    yield "s1_line_dedup", d
-
-    keep_exact = DD.exact_dedup_fast(d, "text", id_col)
-    d = d.join(keep_exact.select(id_col), on=id_col, how="left_semi")
-    yield "s2_exact_dedup", d
-
-    pairs = CC.near_dup_pairs_fast(d, "text", id_col, 0.8)
-    yield "s3a_near_dup_pairs", pairs
-    d = dedup_keep_list(d, pairs, id_col).filter("keep_dedup").drop("keep_dedup")
-    yield "s3_near_dup_keep", d
-
-    stats = HST.host_stats(d, "canonical_url", "text")
-    d = HST.host_reputation_filter(d, stats, "canonical_url")
-    yield "s4_host_filter", d
-
-    t = F.col("text")
-    gate = (Q.keep_expr(t) & Q.repetition_keep_expr(t)
-            & TX.toxicity_keep_expr(t))
-    d = d.filter(gate)
-    yield "s5_quality_gate", d
-
-    scored = CL.score_with_model(d, "text", id_col, (wmap, -0.1), n_buckets=4096)
-    logit_fp = F.round(F.col("logit") * 10000.0).cast("bigint")
-    d = (d.join(scored.select(id_col, logit_fp.alias("logit_fp")), on=id_col)
-         .filter(F.col("logit_fp") > 0))
-    yield "s6_classifier", d
-
-    d = d.withColumn("n_tok", T.ws_token_count_expr(F.col("text")))
-    d = SA.take_by_token_budget(d, id_col, "lang", "n_tok", budgets) \
-        .filter("keep_mix").drop("keep_mix")
-    yield "s7_token_mix", d
-
-    pk = PK.pack_sequences(d.select(id_col, "n_tok"), id_col, "n_tok",
-                           budget=2048, n_buckets=64)
-    d = d.join(pk, on=id_col)
-    yield "s8_pack", d
-
-    out = d.select(
-        id_col, "canonical_url", "lang", "n_tok", "cum_tokens",
-        "logit_fp", "bucket", "bin", "offset",
-        S.scrub_bank_expr(F.col("text")).alias("clean_text"),
-    )
-    yield "s9_scrub_final", out
-
-
-def run_stages(spark):
-    """Cumulative per-stage cost: count each stage prefix once.
-    stage_cost[i] ~ cum[i] - cum[i-1] ONLY if plans share work — they
-    do not (lazy recompute), so both views matter."""
-    pages, n = _corpus(spark)
-    wmap = {b: ((b * 2654435761) % 1000) / 1000.0 - 0.5 for b in range(4096)}
-    bpages = _bpages(spark, pages, n)
-    out = {}
-    for name, df in stage_frames(bpages, wmap):
-        spark.sparkContext.setJobDescription(f"q16 stage {name}")
-        timeit(name, lambda df=df: df.count(), out)
-    spark.sparkContext.setJobDescription(None)
-    print(json.dumps({"mode": "stages", "web_rows": n, "stages": out}))
-
-
 def run_queries(spark):
     pages, n = _corpus(spark)
     out = {}
@@ -166,6 +61,7 @@ def run_queries(spark):
     from social_media_pii_scrubber_spark.operators import classifier as CLF
     from social_media_pii_scrubber_spark.operators import dsir as DSR
     from social_media_pii_scrubber_spark.operators.components import near_dup_dedup
+    from social_media_pii_scrubber_spark.operators.hashing import XXHASH64
     from social_media_pii_scrubber_spark.operators.lines import line_dedup
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -181,8 +77,8 @@ def run_queries(spark):
         threshold=0.95).count(), out)
     timeit("q4c_near_dup_e2e", lambda: near_dup_dedup(
         docs, "text", "doc_id").filter("keep_dedup").count(), out)
-    timeit("q4b_lsh_wide", lambda: DD.lsh_candidate_pairs_fast(
-        docs, "text", "doc_id").count(), out)
+    timeit("q4b_lsh_wide", lambda: DD.lsh_candidate_pairs(
+        docs, "text", "doc_id", family=XXHASH64).count(), out)
 
     def _q15():
         stats = HST.host_stats(pages, "url", "text")
@@ -195,9 +91,10 @@ def run_queries(spark):
         tgt = pages.filter(F.pmod(F.xxhash64("url"), F.lit(100)) < 1)
         src_fit = pages.filter(F.pmod(F.xxhash64("url"), F.lit(10)) < 1)
         ratio = DSR.log_ratio(
-            DSR.bucket_distribution_fast(tgt, "text"),
-            DSR.bucket_distribution_fast(src_fit, "text"))
-        DSR.dsir_weights_fast(pages, "text", "url", ratio).count()
+            DSR.bucket_distribution(tgt, "text", family=XXHASH64),
+            DSR.bucket_distribution(src_fit, "text", family=XXHASH64))
+        DSR.dsir_weights(pages, "text", "url", ratio,
+                         family=XXHASH64).count()
     timeit("q10_dsir", _q10, out)
 
     lined = pages.select(
@@ -210,15 +107,12 @@ def run_queries(spark):
 
 
 def main():
-    mode = sys.argv[1] if len(sys.argv) > 1 else "stages"
+    mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
+    if mode != "queries":
+        raise SystemExit(f"unknown mode {mode}")
     spark = get_spark(app_name=f"bench_extra_{mode}",
                       master=f"local[{CPUS}]", shuffle_partitions=CPUS)
-    if mode == "stages":
-        run_stages(spark)
-    elif mode == "queries":
-        run_queries(spark)
-    else:
-        raise SystemExit(f"unknown mode {mode}")
+    run_queries(spark)
     spark.stop()
 
 

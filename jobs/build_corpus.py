@@ -72,6 +72,7 @@ from social_media_pii_scrubber_spark.operators.components import (
     _cut_lineage, dedup_keep_list, dedup_keep_list_sql,
 )
 from social_media_pii_scrubber_spark.operators.dedup import jaccard_pairs
+from social_media_pii_scrubber_spark.operators.hashing import MD5, XXHASH64
 
 DEFAULT_BUDGETS = {"en": 50_000, "de": 20_000, "fr": 20_000, "es": 15_000}
 CLASSIFIER_BIAS = -0.25
@@ -121,11 +122,15 @@ def build_corpus(pages: DataFrame, *,
     all int/string, hash-stable: (id, canonical_url, lang, n_tok,
     cum_tokens, logit_fp, bucket, bin, offset, clean_text).
 
-    ``oracle_profile=True`` swaps the two no-twin fast paths for their
-    md5 oracle profiles (exact-dedup fingerprint, LSH + hash-family
-    classifier weights) so ``build_corpus_sql`` is an exact twin;
-    the default is the at-scale xxhash64 production profile with
-    ``classifier_model=(weights_dict, bias)`` inference.
+    ``oracle_profile=True`` runs the md5 oracle profile so
+    ``build_corpus_sql`` is an exact twin (with ``classifier_model=None``,
+    whose hash-derived weights the twin renders): s2 exact dedup in the
+    ``MD5`` hash family and s3 near-dup pairs from the oracle's
+    ``jaccard_pairs``. The default is the at-scale production profile:
+    ``XXHASH64`` in s2 and the production near-dup pair stage in s3
+    (its verify step differs from the oracle's, so s3 keeps two
+    branches), with ``classifier_model=(weights_dict, bias)``
+    inference.
 
     ``pii_max_bp`` (opt-in) extends the s5 gate with the PII-density
     DROP policy (functions/scrub.py): pages past ``pii_max_bp`` basis
@@ -171,8 +176,8 @@ def build_corpus(pages: DataFrame, *,
 
     # s2: exact content dedup (collapse identical texts BEFORE LSH —
     # bounds band buckets by distinct-text count; see module doc)
-    keep_exact = (DD.exact_dedup(d, "text", id_col) if oracle_profile
-                  else DD.exact_dedup_fast(d, "text", id_col))
+    keep_exact = DD.exact_dedup(d, "text", id_col,
+                                family=MD5 if oracle_profile else XXHASH64)
     d = mat(d.join(keep_exact.select(id_col), on=id_col, how="left_semi"))
 
     # s3: near-dup dedup (pairs → components → min-id keep flag)

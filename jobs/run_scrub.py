@@ -48,8 +48,8 @@ def parse_args(argv=None):
     p.add_argument("--buckets", type=int, default=256)
     p.add_argument("--months-back", type=int, default=24)
     p.add_argument("--last-date", default="2024-12-31")
-    p.add_argument("--use-model-udfs", action="store_true", default=True)
-    p.add_argument("--no-model-udfs", dest="use_model_udfs", action="store_false")
+    p.add_argument("--no-model-udfs", dest="use_model_udfs", action="store_false",
+                   help="skip the langid/perplexity model UDFs")
     p.add_argument("--from-html", action="store_true",
                    help="extract text from the html:binary column as "
                         "stage 0 (crawl front door; ignores any "

@@ -66,8 +66,9 @@ def fingerprint_expr(text: Column) -> Column:
     """Deterministic document fingerprint: md5 of NFC-ish normalized text.
 
     (lowercased, whitespace-collapsed). Portable across Spark/DuckDB/
-    Python — used by exact dedup. xxhash64 would be faster Spark-side
-    but is not reproducible in the oracle; the bench path uses
+    Python — exact dedup's fingerprint in the ``MD5`` hash family
+    (operators/hashing.py). xxhash64 is faster Spark-side but is not
+    reproducible in the oracle; the ``XXHASH64`` family uses
     ``fingerprint_fast_expr``.
     """
     norm = F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")

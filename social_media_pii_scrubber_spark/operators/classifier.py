@@ -26,6 +26,14 @@ Feature space is shared with DSIR (``dsir.ngrams_expr`` — uni+bigrams
 with multiplicity; md5-prefix oracle buckets / xxhash64 production
 buckets), so a trained model and a DSIR ratio table are interchangeable
 bounded dimensions over the same explode.
+
+The classifier picks its bucketer by width, not by a
+``hashing.HashFamily``: ``classifier_score`` / ``hash_weights_table``
+are the md5 profile (hex-prefix width, string keys) and
+``score_with_model`` / ``train_logreg`` the xxhash64 one (bucket count,
+int keys), and ``classifier_score_expr`` switches on ``n_buckets is
+None``. That switch also picks the key type of the caller's weights
+map, so a ``family=`` would be a second option for the same choice.
 """
 
 from __future__ import annotations
@@ -35,15 +43,13 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dsir import (
+from .dsir import ngrams_expr, ngrams_sql, score_exploded
+from .hashing import (
     BUCKET_PREFIX,
     PROD_BUCKET_PREFIX,
     bucket_expr,
     bucket_fast_expr,
     bucket_sql,
-    ngrams_expr,
-    ngrams_sql,
-    score_exploded,
 )
 
 _HASH_HEX = 6  # md5-derived pseudo-weight resolution (16^6)

@@ -164,9 +164,14 @@ def near_dup_pairs_fast(df: DataFrame, text_col: str, id_col: str,
                         checkpoint: str | None = "local") -> DataFrame:
     """The production near-dup PAIR stage, shared by
     :func:`near_dup_dedup` and the composed corpus-build job
-    (jobs/build_corpus.py): wide xxhash MinHash-LSH candidates →
-    exact shingle-Jaccard verification on candidates only. One home
-    so a recall or threshold fix cannot drift between the two.
+    (jobs/build_corpus.py): MinHash-LSH candidates in the ``XXHASH64``
+    family at its production width (``num_hashes`` / ``band_size``
+    override it) → exact shingle-Jaccard verification on candidates
+    only. One home so a recall or threshold fix cannot drift between
+    the two. It stays apart from the oracle's ``dedup.jaccard_pairs``
+    on purpose: that one filters and returns the 6-dp rounded Jaccard
+    over all candidates; this one filters the unrounded value on
+    prefiltered candidates.
 
     r07: the candidate list is MATERIALIZED (``checkpoint`` — same
     local/reliable contract as connected_components; None = lazy)
@@ -181,14 +186,11 @@ def near_dup_pairs_fast(df: DataFrame, text_col: str, id_col: str,
     used to pay, once per side). Plain joins — the candidate set grows
     with the corpus (never hint-broadcast); AQE broadcasts it when
     genuinely small."""
-    from .dedup import (
-        WIDE_BAND_SIZE, WIDE_NUM_HASHES, lsh_candidate_pairs_fast, shingles_expr,
-    )
+    from .dedup import lsh_candidate_pairs, shingles_expr
+    from .hashing import XXHASH64
 
-    cands = lsh_candidate_pairs_fast(
-        df, text_col, id_col,
-        num_hashes or WIDE_NUM_HASHES, band_size or WIDE_BAND_SIZE,
-    )
+    cands = lsh_candidate_pairs(df, text_col, id_col, num_hashes, band_size,
+                                family=XXHASH64)
     if checkpoint:
         cands = _cut_lineage(cands, checkpoint)
     cand_ids = (cands.select(F.col("id_a").alias(id_col))
@@ -215,7 +217,7 @@ def near_dup_dedup(df: DataFrame, text_col: str, id_col: str,
                    checkpoint: str = "local") -> DataFrame:
     """The PRODUCTION near-dup chain, end to end:
 
-        wide xxhash MinHash-LSH candidates (128 hashes / 16 bands)
+        XXHASH64 MinHash-LSH candidates (128 hashes / 16 bands)
           → exact shingle-Jaccard verification (candidates only)
           → connected components (transitive closure)
           → keep_dedup flag per row (min-id representative kept)

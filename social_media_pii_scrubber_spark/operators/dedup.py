@@ -13,9 +13,15 @@ extensions the engine needs as first-class components:
 - SimHash: 16-bit majority-vote signature; near-dups collide exactly.
 - n-gram Jaccard: exact verification on LSH candidate pairs.
 
-Hash portability: every hash here is md5-derived so the DuckDB oracle
-reproduces it bit-for-bit. The at-scale variants swap md5 for xxhash64
-(``*_fast`` helpers) — same topology, cheaper hash.
+Hash families: exact dedup and MinHash-LSH take ``family=``
+(operators/hashing.py: ``MD5`` oracle profile by default, ``XXHASH64``
+production). Two pairs stay apart on purpose. SimHash: md5 hex-digit
+votes → a 16-char bit string vs xxhash64 bit votes → one bigint; one
+function would branch on the family in both the vote and the assembly.
+``jaccard_pairs`` vs ``components.near_dup_pairs_fast``: the oracle
+filters and returns the 6-dp rounded Jaccard, production filters the
+unrounded value on prefiltered candidates; merging them would change
+one side's output.
 """
 
 from __future__ import annotations
@@ -23,23 +29,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint_expr, fingerprint_fast_expr, let_expr
+from ..functions.text import let_expr
+from .hashing import BAND_SIZE, MD5, NUM_HASHES, HashFamily
 
 SHINGLE_K = 3          # words per shingle
-
-# SMALL ORACLE PROFILE: 4 hashes / 2 bands keeps the md5-portable DuckDB
-# twin tractable. NOT a production dedup configuration — the S-curve is
-# far too shallow (band threshold (1/2)^(1/2) ≈ 0.71 but with only 2
-# bands the false-negative rate at J=0.8 is ~26%).
-NUM_HASHES = 4         # minhash signature length (oracle profile)
-BAND_SIZE = 2          # hashes per LSH band → NUM_HASHES/BAND_SIZE bands
-
-# PRODUCTION PROFILE (the ``*_fast`` xxhash default): 128 hashes in 16
-# bands of 8 → threshold (1/16)^(1/8) ≈ 0.71, P(candidate | J=0.85)
-# ≈ 0.994. tests/test_dedup_recall.py plants J≈0.85 near-dups and
-# measures recall ≥ 0.9; bench.py times this config (q4b).
-WIDE_NUM_HASHES = 128
-WIDE_BAND_SIZE = 8
 
 SIMHASH_BITS = 16      # md5-parity oracle profile (max 32: md5 hex width)
 SIMHASH_FAST_BITS = 64 # xxhash64 production profile
@@ -64,9 +57,10 @@ def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None
 
 # --- exact dedup ------------------------------------------------------------
 
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def exact_dedup(df: DataFrame, text_col: str, id_col: str, *,
+                family: HashFamily = MD5) -> DataFrame:
     """Keep the min-id representative of each normalized-text group."""
-    fp = df.withColumn("fp", fingerprint_expr(F.col(text_col)))
+    fp = df.withColumn("fp", family.fingerprint(F.col(text_col)))
     keep = fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
     return keep.select(id_col, "fp")
 
@@ -76,12 +70,6 @@ def exact_dedup_sql(table_sql: str, text_col: str, id_col: str, fp_sql: str) -> 
         f"select min({id_col}) as {id_col}, {fp_sql} as fp "
         f"from {table_sql} group by fp"
     )
-
-
-def exact_dedup_fast(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """At-scale variant: xxhash64 fingerprint (no oracle twin)."""
-    fp = df.withColumn("fp", fingerprint_fast_expr(F.col(text_col)))
-    return fp.groupBy("fp").agg(F.min(id_col).alias(id_col)).select(id_col, "fp")
 
 
 # --- shingles / minhash -----------------------------------------------------
@@ -134,27 +122,35 @@ def minhash_sql(shingles: str, seed: int) -> str:
 
 
 def minhash_signature(df: DataFrame, text_col: str, id_col: str,
-                      num_hashes: int = NUM_HASHES) -> DataFrame:
-    """(id, mh_0..mh_{n-1}) minhash signature table.
+                      num_hashes: int | None = None, *,
+                      family: HashFamily = MD5) -> DataFrame:
+    """(id, mh_0..mh_{n-1}) minhash signature table; ``num_hashes``
+    defaults to the family's width.
 
     Physical shape: explode shingles once → one groupBy(id) computing
-    every min(md5(seed:shingle)) as plain aggregates. This keeps the
+    every min(hash(seed, shingle)) as plain aggregates. This keeps the
     expensive tokenize/shingle work to a single evaluation (the
     HOF-array formulation re-inlines it once per seed and runs
     interpreted — measured 4-16x slower), and the shuffle is tiny:
     partial aggregation reduces map-side to one row per (id) before the
-    exchange. Docs shorter than the shingle width get a NULL signature
-    (array_min of empty ≡ min over no rows).
+    exchange. The doc side is adaptively repartitioned so a few-split
+    input doesn't serialize the aggregate on one core. Docs shorter
+    than the shingle width get a NULL signature (array_min of empty ≡
+    min over no rows).
     """
     toks = ensure_min_parallelism(df).select(
         F.col(id_col),
         F.explode_outer(shingles_expr(F.col(text_col))).alias("sh"),
     )
+    key = F.col("sh")
+    if family.shingle_key is not None:
+        # a separate column, so the per-seed aggregates share one hash
+        # of each shingle string; md5 keeps the one-projection plan
+        toks = toks.withColumn("h", family.shingle_key(key))
+        key = F.col("h")
     aggs = [
-        F.min(
-            F.md5(F.concat(F.lit(f"{seed}:"), F.col("sh")).cast("binary"))
-        ).alias(f"mh_{seed}")
-        for seed in range(num_hashes)
+        F.min(family.minhash(seed, key)).alias(f"mh_{seed}")
+        for seed in range(num_hashes or family.num_hashes)
     ]
     return toks.groupBy(id_col).agg(*aggs)
 
@@ -169,24 +165,38 @@ def minhash_signature_sql(table_sql: str, text_col: str, id_col: str,
 
 
 def lsh_candidate_pairs(df: DataFrame, text_col: str, id_col: str,
-                        num_hashes: int = NUM_HASHES,
-                        band_size: int = BAND_SIZE) -> DataFrame:
+                        num_hashes: int | None = None,
+                        band_size: int | None = None,
+                        max_bucket: int | None = None, *,
+                        family: HashFamily = MD5) -> DataFrame:
     """MinHash-LSH candidate duplicate pairs (id_a < id_b).
 
     Bands of `band_size` minhashes; docs sharing any band bucket become
     a candidate pair. The bucket join shuffles on the band key — at
-    scale, band keys are high-cardinality md5s, so no skew.
+    scale, band keys are high-cardinality hashes, so no skew. Widths
+    default to the family's (4/2 md5 oracle profile, 128/8 xxhash64
+    production profile).
+
+    ``max_bucket`` (off by default — it changes the candidate set, so
+    no oracle-gated path sets it) is the 100-TB skew guard: a band
+    bucket of size k contributes k(k-1)/2 pairs, and the buckets that
+    explode are precisely the boilerplate-universal bands whose member
+    docs agree on a band of minhashes shared by millions of pages —
+    pair-verifying those is the quadratic failure mode. Buckets larger
+    than the cap are dropped WHOLE; a genuine near-dup pair still
+    meets in its other bands (16 chances at the production width),
+    which is why recall on planted J≈0.85 dups survives the cap
+    (tests/test_dedup_recall.py pins this).
     """
-    sig = minhash_signature(df, text_col, id_col, num_hashes)
+    num_hashes = num_hashes or family.num_hashes
+    band_size = band_size or family.band_size
+    sig = minhash_signature(df, text_col, id_col, num_hashes, family=family)
     n_bands = num_hashes // band_size
     # ONE projection computes every band key, then posexplode — the
     # expensive shingle+minhash work appears exactly once in the plan.
     band_arr = F.array(*[
-        F.md5(
-            F.concat(
-                *[F.col(f"mh_{b * band_size + j}") for j in range(band_size)]
-            ).cast("binary")
-        )
+        family.band_key(
+            *[F.col(f"mh_{b * band_size + j}") for j in range(band_size)])
         for b in range(n_bands)
     ])
     bands = sig.select(
@@ -197,6 +207,16 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str, id_col: str,
     # signature once total instead of once per side (the naive plan
     # recomputed shingles+md5 16x; see BENCH notes).
     bands = bands.repartition("band", "bkey")
+    if max_bucket is not None:
+        # bucket-size filter as a WINDOW count over the same
+        # (band, bkey) partitioning the repartition above already
+        # established — no join, no additional exchange (measured:
+        # the semi-join alternative added two)
+        _w = Window.partitionBy("band", "bkey")
+        bands = (bands
+                 .withColumn("_n", F.count(F.lit(1)).over(_w))
+                 .filter(F.col("_n") <= max_bucket)
+                 .drop("_n"))
     left = bands.alias("l")
     right = bands.alias("r")
     pairs = (
@@ -228,71 +248,6 @@ def lsh_candidate_pairs_sql(table_sql: str, text_col: str, id_col: str,
         f"select distinct l.{id_col} as id_a, r.{id_col} as id_b "
         f"from bands l join bands r using (band, bkey) "
         f"where l.{id_col} < r.{id_col}"
-    )
-
-
-def lsh_candidate_pairs_fast(df: DataFrame, text_col: str, id_col: str,
-                             num_hashes: int = WIDE_NUM_HASHES,
-                             band_size: int = WIDE_BAND_SIZE,
-                             max_bucket: int | None = None) -> DataFrame:
-    """At-scale LSH variant: xxhash64 instead of md5 (no oracle twin).
-
-    Same topology as ``lsh_candidate_pairs``; the signature aggregation
-    and band keys use 64-bit xxhash (whole-stage codegen, no hex-string
-    materialization) — the version you run on 100 TB. Two further
-    at-scale economies: each shingle STRING is hashed exactly once
-    (``h = xxhash64(sh)``) and the k minhashes derive from the fixed
-    12-byte ``xxhash64(seed, h)`` — k string re-hashes were ~10% of the
-    operator; and the doc side is adaptively repartitioned so a
-    few-split input doesn't serialize the 128-hash aggregate on one
-    core. Defaults to the PRODUCTION width (128 hashes / 16 bands):
-    recall at J=0.85 is measured ≥0.9 by tests/test_dedup_recall.py.
-
-    ``max_bucket`` (off by default — it changes the candidate set, so
-    no oracle-gated path sets it) is the 100-TB skew guard: a band
-    bucket of size k contributes k(k-1)/2 pairs, and the buckets that
-    explode are precisely the boilerplate-universal bands whose member
-    docs agree on a band of minhashes shared by millions of pages —
-    pair-verifying those is the quadratic failure mode. Buckets larger
-    than the cap are dropped WHOLE; a genuine near-dup pair still
-    meets in its other bands (16 chances at the default width), which
-    is why recall on planted J≈0.85 dups survives the cap
-    (tests/test_dedup_recall.py pins this).
-    """
-    toks = ensure_min_parallelism(df).select(
-        F.col(id_col),
-        F.explode_outer(shingles_expr(F.col(text_col))).alias("sh"),
-    ).withColumn("h", F.xxhash64(F.col("sh")))
-    aggs = [
-        F.min(F.xxhash64(F.lit(seed), F.col("h"))).alias(f"mh_{seed}")
-        for seed in range(num_hashes)
-    ]
-    sig = toks.groupBy(id_col).agg(*aggs)
-    n_bands = num_hashes // band_size
-    band_arr = F.array(*[
-        F.xxhash64(*[F.col(f"mh_{b * band_size + j}") for j in range(band_size)])
-        for b in range(n_bands)
-    ])
-    bands = sig.select(
-        F.col(id_col), F.posexplode(band_arr).alias("band", "bkey")
-    ).repartition("band", "bkey")
-    if max_bucket is not None:
-        # bucket-size filter as a WINDOW count over the same
-        # (band, bkey) partitioning the repartition above already
-        # established — no join, no additional exchange (measured:
-        # the semi-join alternative added two)
-        _w = Window.partitionBy("band", "bkey")
-        bands = (bands
-                 .withColumn("_n", F.count(F.lit(1)).over(_w))
-                 .filter(F.col("_n") <= max_bucket)
-                 .drop("_n"))
-    left, right = bands.alias("l"), bands.alias("r")
-    return (
-        left.join(right, on=["band", "bkey"])
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
     )
 
 

@@ -4,7 +4,9 @@
 Select pretraining data whose distribution matches a TARGET corpus:
 
 1. hash word uni+bigrams (with multiplicity) into a FIXED bucket space
-   (md5-hex prefix — the repo's portable-hash convention);
+   (``family=``, a ``hashing.HashFamily``: md5-hex prefix in the
+   default ``MD5`` oracle profile, xxhash64 → bigint in the
+   ``XXHASH64`` production profile);
 2. fit smoothed bucket distributions over the source corpus and the
    target sample (``bucket_distribution``);
 3. score every source doc with Σ_ngrams log(p_target / p_source)
@@ -13,8 +15,8 @@ Select pretraining data whose distribution matches a TARGET corpus:
    (``dsir_topk`` — Gumbel noise derived from the md5 of the doc id,
    so the draw is reproducible and layout-independent).
 
-Scale shape: the bucket space is bounded by construction (16^prefix
-buckets — 256 in the oracle profile, 65536 in production), so the
+Scale shape: the bucket space is bounded by construction (256
+buckets in the oracle profile, 65536 in production), so the
 log-ratio table is a fixed-size dimension no matter how large the
 corpus grows. The score join FORCE-broadcasts it (this is NOT a
 corpus-growing vocabulary, so the no-forced-broadcast invariant does
@@ -35,8 +37,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-BUCKET_PREFIX = 2          # 16^2 = 256 buckets (oracle profile)
-PROD_BUCKET_PREFIX = 4     # 65536 buckets (production profile)
+from .hashing import BUCKET_PREFIX, MD5, HashFamily, bucket_sql
+
 _GUMBEL_HEX = 6            # uniform resolution: 16^6
 
 
@@ -71,26 +73,6 @@ def ngrams_sql(text: str) -> str:
     return f"list_concat({w}, {bi})"
 
 
-def bucket_expr(ngram: Column, prefix_len: int = BUCKET_PREFIX) -> Column:
-    return F.substring(F.md5(ngram.cast("binary")), 1, prefix_len)
-
-
-def bucket_sql(ngram: str, prefix_len: int = BUCKET_PREFIX) -> str:
-    return f"substr(md5({ngram}), 1, {prefix_len})"
-
-
-def bucket_fast_expr(ngram: Column, n_buckets: int = 16 ** PROD_BUCKET_PREFIX
-                     ) -> Column:
-    """Production bucketer: xxhash64 → pmod (one JVM hash, bigint
-    bucket — no hex strings in the explode-width shuffle). Same
-    role as the md5-prefix oracle profile, different hash family.
-    Null-guarded: xxhash64(null) returns the SEED (42), not null —
-    without the guard an empty doc's explode_outer null would land in
-    bucket 42%n and score nonzero instead of 0."""
-    return F.when(ngram.isNull(), F.lit(None).cast("bigint")) \
-        .otherwise(F.pmod(F.xxhash64(ngram), F.lit(n_buckets)))
-
-
 def _distribution(df: DataFrame, text_col: str, space: DataFrame,
                   bucket_of, n_buckets: int) -> DataFrame:
     # bucket inside the array, explode bucket ids (see score_exploded)
@@ -109,44 +91,22 @@ def _distribution(df: DataFrame, text_col: str, space: DataFrame,
     )
 
 
-def bucket_distribution_fast(df: DataFrame, text_col: str,
-                             n_buckets: int = 16 ** PROD_BUCKET_PREFIX
-                             ) -> DataFrame:
-    """Production-profile distribution: bigint xxhash64 buckets over
-    the complete [0, n_buckets) space."""
-    space = df.sparkSession.range(n_buckets).select(
-        F.col("id").alias("bucket"))
-    return _distribution(df, text_col, space,
-                         lambda ng: bucket_fast_expr(ng, n_buckets),
-                         n_buckets)
-
-
-def dsir_weights_fast(df: DataFrame, text_col: str, id_col: str,
-                      ratio: DataFrame,
-                      n_buckets: int = 16 ** PROD_BUCKET_PREFIX
-                      ) -> DataFrame:
-    """Production-profile scoring: score_exploded with bigint xxhash64
-    buckets."""
-    return score_exploded(
-        df, text_col, id_col, ratio,
-        lambda ng: bucket_fast_expr(ng, n_buckets), "logr", "logw")
-
-
 def bucket_distribution(df: DataFrame, text_col: str,
-                        prefix_len: int = BUCKET_PREFIX) -> DataFrame:
+                        n_buckets: int | None = None, *,
+                        family: HashFamily = MD5) -> DataFrame:
     """(bucket, logp): Laplace-smoothed log bucket probabilities over
     the corpus's hashed n-grams, materialized over the COMPLETE bucket
     space — zero-count buckets get the smoothing floor
     ln(1/(total+n_buckets)), never a null. (Treating an absent bucket
     as logp=0=ln(1) would invert DSIR: ngrams unseen in the target
     would be maximally favored.) One explode + one partial-agg'd count
-    shuffle; the result is exactly 16^prefix rows — a bounded
-    dimension."""
-    n_buckets = 16 ** prefix_len
+    shuffle; the result is exactly ``n_buckets`` rows (default: the
+    family's width) — a bounded dimension."""
+    n_buckets = n_buckets or family.n_buckets
     space = df.sparkSession.range(n_buckets).select(
-        F.lpad(F.lower(F.hex(F.col("id"))), prefix_len, "0").alias("bucket"))
+        family.bucket_space(F.col("id"), n_buckets).alias("bucket"))
     return _distribution(df, text_col, space,
-                         lambda ng: bucket_expr(ng, prefix_len), n_buckets)
+                         lambda ng: family.bucket(ng, n_buckets), n_buckets)
 
 
 def bucket_distribution_sql(table_sql: str, text_col: str,
@@ -166,11 +126,10 @@ def bucket_distribution_sql(table_sql: str, text_col: str,
     )
 
 
-def log_ratio(target_dist: DataFrame, source_dist: DataFrame,
-              prefix_len: int = BUCKET_PREFIX) -> DataFrame:
+def log_ratio(target_dist: DataFrame, source_dist: DataFrame) -> DataFrame:
     """(bucket, logr = logp_target − logp_source). Both inputs cover
     the complete bucket space (bucket_distribution), so this is a
-    plain equi-join of two 16^prefix-row dimensions."""
+    plain equi-join of two bucket-space-sized dimensions."""
     t = target_dist.select(F.col("bucket"), F.col("logp").alias("lt"))
     s = source_dist.select(F.col("bucket"), F.col("logp").alias("ls"))
     return t.join(s, on="bucket", how="inner").select(
@@ -221,13 +180,16 @@ def score_exploded(df: DataFrame, text_col: str, id_col: str,
 
 
 def dsir_weights(df: DataFrame, text_col: str, id_col: str,
-                 ratio: DataFrame,
-                 prefix_len: int = BUCKET_PREFIX) -> DataFrame:
+                 ratio: DataFrame, n_buckets: int | None = None, *,
+                 family: HashFamily = MD5) -> DataFrame:
     """(id, logw): per-doc importance log-weight Σ logr over the doc's
-    hashed n-grams (see score_exploded for the scale topology)."""
+    hashed n-grams (see score_exploded for the scale topology).
+    ``n_buckets`` and ``family`` must match the ones ``ratio`` was
+    fitted with."""
+    n_buckets = n_buckets or family.n_buckets
     return score_exploded(
         df, text_col, id_col, ratio,
-        lambda ng: bucket_expr(ng, prefix_len), "logr", "logw")
+        lambda ng: family.bucket(ng, n_buckets), "logr", "logw")
 
 
 def dsir_weights_sql(table_sql: str, text_col: str, id_col: str,

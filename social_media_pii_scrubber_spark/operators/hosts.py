@@ -61,8 +61,8 @@ def host_stats(pages: DataFrame, url_col: str = "url",
     t = F.col(text_col)
     # r07: the fingerprint feeds ONLY a distinct count, so the cheaper
     # 64-bit xxhash64 replaces md5 (same count up to a ~n²/2^65
-    # collision bound — the same equality standard exact_dedup_fast
-    # already applies corpus-wide; measured 0.63 s → 0.40 s/1M docs on
+    # collision bound — the same equality standard exact_dedup applies
+    # corpus-wide in the XXHASH64 family; measured 0.63 s → 0.40 s/1M docs on
     # the hash alone). Null-guarded because xxhash64(null) returns the
     # seed, not null — md5's null would be EXCLUDED from the distinct
     # count and that semantic must not drift.

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from social_media_pii_scrubber_spark.operators import classifier as CL
 from social_media_pii_scrubber_spark.operators import dsir as DS
+from social_media_pii_scrubber_spark.operators import hashing as HS
 
 GOOD = [
     "the committee published a detailed report on the findings",
@@ -46,7 +47,7 @@ class TestScore:
             "doc_id long, text string")
         # buckets for ngrams of "x x": ["x", "x", "x x"]
         rows = df.select(F.explode(DS.ngrams_expr(F.col("text"))).alias("ng")) \
-            .select(DS.bucket_expr(F.col("ng")).alias("b")).collect()
+            .select(HS.bucket_expr(F.col("ng")).alias("b")).collect()
         buckets = [r.b for r in rows]
         w = spark.createDataFrame(
             pd.DataFrame({"bucket": sorted(set(buckets)),
@@ -81,7 +82,7 @@ class TestTrain:
         feats = df.select(
             "doc_id", F.explode(DS.ngrams_expr(F.col("text"))).alias("ng"),
         ).select(
-            "doc_id", DS.bucket_fast_expr(F.col("ng"), nb).alias("b"),
+            "doc_id", HS.bucket_fast_expr(F.col("ng"), nb).alias("b"),
         ).collect()
         feats_by_id: dict = {}
         for r in feats:
@@ -111,7 +112,7 @@ class TestTrain:
         feats = df.select(
             "doc_id", F.explode(DS.ngrams_expr(F.col("text"))).alias("ng"),
         ).select(
-            "doc_id", DS.bucket_fast_expr(F.col("ng"), nb).alias("b"),
+            "doc_id", HS.bucket_fast_expr(F.col("ng"), nb).alias("b"),
         ).collect()
         feats_by_id: dict = {0: [], 1: [], 2: []}
         for r in feats:

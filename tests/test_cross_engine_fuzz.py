@@ -24,6 +24,7 @@ from social_media_pii_scrubber_spark.functions import toxicity as TX
 from social_media_pii_scrubber_spark.functions import urls as U
 from social_media_pii_scrubber_spark.operators import classifier as CLF
 from social_media_pii_scrubber_spark.operators import dsir as DS
+from social_media_pii_scrubber_spark.operators import hashing as HS
 from social_media_pii_scrubber_spark.operators import lines as LN
 
 FRAGMENTS = [
@@ -112,7 +113,7 @@ def test_all_twins_agree(spark, corpora):
         # differ between numpy and duckdb), bucket hash, gumbel draw
         # rounded to 6dp (JVM vs C libm log() may differ in last ulp)
         F.concat_ws("\x1f", DS.ngrams_expr(F.col("t"))).alias("dsng"),
-        DS.bucket_expr(F.col("t")).alias("dsbk"),
+        HS.bucket_expr(F.col("t")).alias("dsbk"),
         F.round(DS.gumbel_expr(F.col("t")), 6).alias("dsgu"),
         F.round(CLF.hash_weight_expr(F.col("t")), 9).alias("clw"),
         ENC.fix_mojibake_expr(F.col("t")).alias("moji"),
@@ -142,7 +143,7 @@ def test_all_twins_agree(spark, corpora):
         # coalesce: duckdb renders an empty ngram list as NULL here,
         # Spark's concat_ws as '' — same contents, different rendering
         f"coalesce(array_to_string({DS.ngrams_sql('t')}, chr(31)), '') as dsng, "
-        f"{DS.bucket_sql('t')} as dsbk, "
+        f"{HS.bucket_sql('t')} as dsbk, "
         f"round({DS.gumbel_sql('t')}, 6) as dsgu, "
         f"round({CLF.hash_weight_sql('t')}, 9) as clw, "
         f"{ENC.fix_mojibake_sql('t')} as moji, "

@@ -1,7 +1,8 @@
 """Recall of the PRODUCTION MinHash-LSH profile on planted near-dups.
 
 VERDICT r1: the 4-hash/2-band oracle profile is demo-scale; the
-production path (lsh_candidate_pairs_fast, 128 hashes / 16 bands of 8)
+production path (lsh_candidate_pairs in the XXHASH64 family, 128 hashes
+/ 16 bands of 8)
 must catch J~0.85 near-duplicates with recall >= 0.9. This test plants
 word-level perturbations, computes TRUE shingle Jaccard in plain Python
 (independent implementation), and measures candidate recall on the
@@ -14,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from social_media_pii_scrubber_spark.operators import dedup as DD
+from social_media_pii_scrubber_spark.operators.hashing import XXHASH64
 
 SF = "/root/testdata/sf0.01"
 
@@ -52,7 +54,8 @@ def planted(spark):
 
 def test_wide_lsh_recall_at_085(planted):
     df, truth = planted
-    pairs = DD.lsh_candidate_pairs_fast(df, "text", "doc_id").collect()
+    pairs = DD.lsh_candidate_pairs(df, "text", "doc_id",
+                                   family=XXHASH64).collect()
     found = {(r.id_a, r.id_b) for r in pairs}
     eligible = [d for d, j in truth.items() if j >= 0.8]
     assert len(eligible) >= 20, f"fixture too weak: {len(eligible)} eligible pairs"
@@ -67,10 +70,12 @@ def test_wide_profile_beats_oracle_profile(planted):
     df, truth = planted
     eligible = [d for d, j in truth.items() if j >= 0.8]
     wide = {(r.id_a, r.id_b) for r in
-            DD.lsh_candidate_pairs_fast(df, "text", "doc_id").collect()}
+            DD.lsh_candidate_pairs(df, "text", "doc_id",
+                                   family=XXHASH64).collect()}
     narrow = {(r.id_a, r.id_b) for r in
-              DD.lsh_candidate_pairs_fast(df, "text", "doc_id",
-                                          num_hashes=4, band_size=2).collect()}
+              DD.lsh_candidate_pairs(df, "text", "doc_id",
+                                     num_hashes=4, band_size=2,
+                                     family=XXHASH64).collect()}
     hits_w = sum((d, d + 100000) in wide for d in eligible)
     hits_n = sum((d, d + 100000) in narrow for d in eligible)
     assert hits_w >= hits_n
@@ -140,13 +145,13 @@ def test_bucket_cap_preserves_recall_and_cuts_exploded_buckets(planted):
         "doc_id long, text string")
     full = df.union(extra)
 
-    capped = {(r.id_a, r.id_b) for r in DD.lsh_candidate_pairs_fast(
-        full, "text", "doc_id", max_bucket=8).collect()}
+    capped = {(r.id_a, r.id_b) for r in DD.lsh_candidate_pairs(
+        full, "text", "doc_id", max_bucket=8, family=XXHASH64).collect()}
     hits = sum((d, d + 100000) in capped for d in eligible)
     assert hits / len(eligible) >= 0.9
     assert not any(a >= 900000 and b >= 900000 for a, b in capped)
 
     # and without the cap the boilerplate cluster floods in
-    open_ = {(r.id_a, r.id_b) for r in DD.lsh_candidate_pairs_fast(
-        full, "text", "doc_id").collect()}
+    open_ = {(r.id_a, r.id_b) for r in DD.lsh_candidate_pairs(
+        full, "text", "doc_id", family=XXHASH64).collect()}
     assert sum(a >= 900000 and b >= 900000 for a, b in open_) == 780

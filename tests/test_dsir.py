@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from social_media_pii_scrubber_spark.operators import dsir as DS
+from social_media_pii_scrubber_spark.operators.hashing import XXHASH64
 
 SRC = {
     1: "the quick brown fox jumps high",        # en: target vocabulary
@@ -83,12 +84,12 @@ class TestFastProfile:
         t = spark.createDataFrame(pd.DataFrame({"text": TGT}), "text string")
         nb = 4096
         ratio = DS.log_ratio(
-            DS.bucket_distribution_fast(t, "text", nb),
-            DS.bucket_distribution_fast(d, "text", nb),
+            DS.bucket_distribution(t, "text", nb, family=XXHASH64),
+            DS.bucket_distribution(d, "text", nb, family=XXHASH64),
         )
         got = {r.doc_id: r.logw
-               for r in DS.dsir_weights_fast(d, "text", "doc_id", ratio,
-                                             nb).collect()}
+               for r in DS.dsir_weights(d, "text", "doc_id", ratio, nb,
+                                        family=XXHASH64).collect()}
         assert got[5] == 0.0
         assert min(got[1], got[3]) > max(got[2], got[4])
 

@@ -1,11 +1,14 @@
 """Operator semantics: joins, pivots, dedup, similarity, media, windows."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import ORACLE_SF
 from social_media_pii_scrubber_spark.operators.dedup import (
     exact_dedup, jaccard_pairs, lsh_candidate_pairs, simhash_signature,
 )
+from social_media_pii_scrubber_spark.operators.hashing import MD5, XXHASH64
 from social_media_pii_scrubber_spark.operators.joins import (
     anti_join, semi_flag_join, zip_longest_join,
 )
@@ -89,13 +92,33 @@ class TestDedup:
             ],
         }))
 
-    def test_exact_dedup(self, spark):
-        out = exact_dedup(self._docs(spark), "text", "doc_id")
+    @pytest.mark.parametrize("family", [MD5, XXHASH64], ids=lambda f: f.name)
+    def test_exact_dedup(self, spark, family):
+        out = exact_dedup(self._docs(spark), "text", "doc_id", family=family)
         assert {r.doc_id for r in out.collect()} == {1, 3, 4}
 
-    def test_lsh_finds_dups(self, spark):
+    def test_exact_dedup_families_keep_same_ids(self, spark):
+        """On collision-free data the production fingerprint keeps
+        exactly the oracle profile's ids: the sf0.01 documents plus
+        planted copies that differ only in case and outer whitespace
+        (both normalized away), so each copy must be dropped."""
+        docs = spark.read.parquet(f"{ORACLE_SF}/documents.parquet") \
+            .select("doc_id", "text")
+        copies = docs.filter(F.col("doc_id") % 10 == 0).select(
+            (F.col("doc_id") + 10 ** 9).alias("doc_id"),
+            F.concat(F.lit("  "), F.upper("text")).alias("text"))
+        df = docs.unionByName(copies)
+        keep = {f.name: {r.doc_id for r in
+                         exact_dedup(df, "text", "doc_id", family=f).collect()}
+                for f in (MD5, XXHASH64)}
+        assert keep["md5"] == keep["xxhash64"]
+        assert not any(i >= 10 ** 9 for i in keep["md5"])
+
+    @pytest.mark.parametrize("family", [MD5, XXHASH64], ids=lambda f: f.name)
+    def test_lsh_finds_dups(self, spark, family):
         pairs = {(r.id_a, r.id_b) for r in
-                 lsh_candidate_pairs(self._docs(spark), "text", "doc_id").collect()}
+                 lsh_candidate_pairs(self._docs(spark), "text", "doc_id",
+                                     family=family).collect()}
         assert (1, 2) in pairs
         assert all(4 not in p for p in pairs)
 

@@ -6,12 +6,14 @@ tests pin the plan properties the engine's performance depends on
 scan, self-joins reuse exchanges, aggregations stay partial).
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from social_media_pii_scrubber_spark.config import ScrubConfig
 from social_media_pii_scrubber_spark.operators.dedup import (
     exact_dedup, lsh_candidate_pairs,
 )
+from social_media_pii_scrubber_spark.operators.hashing import MD5, XXHASH64
 from social_media_pii_scrubber_spark.operators.joins import anti_join, semi_flag_join
 from social_media_pii_scrubber_spark.plans.pipeline import filter_scrub_pipeline
 from social_media_pii_scrubber_spark.sources.webpages import webpages_from_documents
@@ -75,11 +77,12 @@ def test_anti_join_is_broadcast(spark, sf_dir):
     assert "BroadcastHashJoin" in p and "LeftAnti" in p
 
 
-def test_lsh_self_join_reuses_exchange(spark, sf_dir):
+@pytest.mark.parametrize("family", [MD5, XXHASH64], ids=lambda f: f.name)
+def test_lsh_self_join_reuses_exchange(spark, sf_dir, family):
     """The expensive minhash subtree must be computed once, not once
-    per self-join side."""
+    per self-join side — in both hash families."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    df = lsh_candidate_pairs(docs, "text", "doc_id")
+    df = lsh_candidate_pairs(docs, "text", "doc_id", family=family)
     df.collect()  # AQE finalizes the plan
     p = plan_of(df)
     assert "ReusedExchange" in p, p[:3000]
