@@ -81,20 +81,16 @@ PACK_BUCKETS = 64
 
 
 def build_corpus(pages: DataFrame, *,
-                 id_col: str = "doc_id", url_col: str = "url",
-                 text_col: str = "text", lang_col: str = "lang",
+                 id_col: str = "doc_id",
                  oracle_profile: bool = False,
                  fix_encoding: bool = False,
                  pii_max_bp: int | None = None,
-                 jaccard_threshold: float = 0.8,
                  classifier_model: tuple | None = None,
                  classifier_buckets: int | None = None,
                  classifier_bias: float = CLASSIFIER_BIAS,
                  budgets: dict[str, int] | None = None,
                  pack_budget: int = PACK_BUDGET,
                  pack_buckets: int = PACK_BUCKETS,
-                 min_keep_frac: float = HST.MIN_KEEP_FRAC,
-                 max_dup_frac: float = HST.MAX_DUP_FRAC,
                  checkpoint: str | None = "local") -> DataFrame:
     """pages(id, url, text, lang) → curated, scrubbed, pack-assigned
     training corpus.
@@ -154,14 +150,14 @@ def build_corpus(pages: DataFrame, *,
 
     # s0: (opt-in) encoding repair, canonicalize + canonical-url dedup
     # (keep min id per canon)
-    t0 = F.col(text_col)
+    t0 = F.col("text")
     if fix_encoding:
         t0 = ENC.fix_mojibake_expr(t0)
     c = pages.select(
         i.alias(id_col),
-        U.url_canonicalize_expr(F.col(url_col)).alias("canonical_url"),
+        U.url_canonicalize_expr(F.col("url")).alias("canonical_url"),
         t0.alias("text"),
-        F.col(lang_col).alias("lang"),
+        F.col("lang"),
     )
     first = c.groupBy("canonical_url").agg(F.min(id_col).alias(id_col))
     c = mat(c.join(first, on=["canonical_url", id_col]))
@@ -182,18 +178,15 @@ def build_corpus(pages: DataFrame, *,
 
     # s3: near-dup dedup (pairs → components → min-id keep flag)
     if oracle_profile:
-        pairs = jaccard_pairs(d, "text", id_col,
-                              threshold=jaccard_threshold).select("id_a", "id_b")
+        pairs = jaccard_pairs(d, "text", id_col).select("id_a", "id_b")
     else:
-        pairs = CC.near_dup_pairs_fast(d, "text", id_col, jaccard_threshold)
+        pairs = CC.near_dup_pairs_fast(d, "text", id_col)
     d = mat(dedup_keep_list(d, pairs, id_col)
             .filter("keep_dedup").drop("keep_dedup"))
 
     # s4: host/domain reputation rollup + filter-back
     stats = HST.host_stats(d, "canonical_url", "text")
-    d = HST.host_reputation_filter(d, stats, "canonical_url",
-                                   min_keep_frac=min_keep_frac,
-                                   max_dup_frac=max_dup_frac)
+    d = HST.host_reputation_filter(d, stats, "canonical_url")
 
     # s5: heuristic quality + repetition + toxicity gate (pure codegen)
     t = F.col("text")
@@ -244,17 +237,13 @@ def build_corpus(pages: DataFrame, *,
 
 
 def build_corpus_sql(pages_sql: str, *,
-                     id_col: str = "doc_id", url_col: str = "url",
-                     text_col: str = "text", lang_col: str = "lang",
+                     id_col: str = "doc_id",
                      fix_encoding: bool = False,
                      pii_max_bp: int | None = None,
-                     jaccard_threshold: float = 0.8,
                      classifier_bias: float = CLASSIFIER_BIAS,
                      budgets: dict[str, int] | None = None,
                      pack_budget: int = PACK_BUDGET,
-                     pack_buckets: int = PACK_BUCKETS,
-                     min_keep_frac: float = HST.MIN_KEEP_FRAC,
-                     max_dup_frac: float = HST.MAX_DUP_FRAC) -> str:
+                     pack_buckets: int = PACK_BUCKETS) -> str:
     """DuckDB twin of ``build_corpus(oracle_profile=True)``: the same
     chain rendered stage by stage from each operator's SQL twin, one
     CTE per stage (nested WITH in a CTE body is fine in DuckDB — the
@@ -266,11 +255,10 @@ def build_corpus_sql(pages_sql: str, *,
     stages combinatorially (measured: minutes at 500 docs vs ~2 s
     materialized)."""
     budgets = DEFAULT_BUDGETS if budgets is None else budgets
-    t0 = ENC.fix_mojibake_sql(text_col) if fix_encoding else text_col
-    canon = U.url_canonicalize_sql(url_col)
+    t0 = ENC.fix_mojibake_sql("text") if fix_encoding else "text"
+    canon = U.url_canonicalize_sql("url")
     pairs = ("select id_a, id_b from ("
-             + DD.jaccard_pairs_sql("d", "text", id_col,
-                                    threshold=jaccard_threshold) + ")")
+             + DD.jaccard_pairs_sql("d", "text", id_col) + ")")
     gate = (f"{Q.keep_sql('text')} and {Q.repetition_keep_sql('text')} "
             f"and {TX.toxicity_keep_sql('text')}")
     if pii_max_bp is not None:
@@ -281,7 +269,7 @@ def build_corpus_sql(pages_sql: str, *,
         f"with p as ({pages_sql}), "
         # s0: canonicalize + canonical-url dedup
         f"c0 as materialized (select {id_col}, {canon} as canonical_url, "
-        f"  {t0} as text, {lang_col} as lang from p), "
+        f"  {t0} as text, lang from p), "
         f"cf as (select canonical_url, min({id_col}) as {id_col} "
         f"  from c0 group by canonical_url), "
         f"c as materialized "
@@ -299,7 +287,7 @@ def build_corpus_sql(pages_sql: str, *,
         f"nd as materialized (select {id_col}, canonical_url, lang, text "
         f"  from ndo where keep_dedup), "
         # s4: host reputation filter
-        f"hf as ({HST.host_reputation_filter_sql('nd', 'canonical_url', 'text', min_keep_frac, max_dup_frac)}), "
+        f"hf as ({HST.host_reputation_filter_sql('nd', 'canonical_url')}), "
         # s5: heuristic gate
         f"g as materialized (select * from hf where {gate}), "
         # s6: classifier selection, 4-dp fixed point

@@ -1,21 +1,31 @@
-"""Gopher/C4-style quality heuristics as pure column expressions.
+"""Gopher/C4-style quality heuristics and keep rules as column expressions.
 
-Each heuristic is defined ONCE and rendered twice: as a PySpark Column
-(Catalyst whole-stage codegen — zero Python in the hot path, per the
-north star) and as the equivalent DuckDB SQL (the correctness oracle).
-Keeping both renderers next to each other prevents semantic drift.
+Each heuristic formula is written once per engine, the PySpark Column
+(Catalyst codegen, zero Python in the hot path) next to its DuckDB SQL
+twin (the correctness oracle): ``word_heuristics[_sql]`` over a word
+array and ``line_heuristics[_sql]`` over a line array, both passed in
+by the caller so a composite keep splits each row once. Each keep rule
+is one ``(heuristic, lo, hi)`` row of ``KEEP_RULES`` /
+``REPETITION_RULES``; ``passes`` renders a row for either engine and
+``keep_of`` folds a table into one conjunction, so the keep gates, the
+flagship's keep column and the audit's drop counts read the same rows.
 
 Reference lineage: the reference's only quality predicate is the
-blank-after-scrub filter (/root/reference/SMParser/smparsers.py:262);
-the heuristic bank generalizes that to web-scale quality filtering
-(doc length, symbol ratio, stop-word fraction, repetition — the
-Gopher/C4 rule families named in BASELINE.json north_star).
+blank-after-scrub filter (SMParser/smparsers.py:262); the heuristic
+bank generalizes that to web-scale quality filtering (doc length,
+symbol ratio, stop-word fraction, repetition — the Gopher/C4 rule
+families named in BASELINE.json north_star).
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .text import let_expr
 
 # English stopword slice used by the stopword-fraction heuristic.
 STOPWORDS: tuple[str, ...] = (
@@ -32,6 +42,53 @@ MIN_STOPWORD_FRACTION = 0.02
 MIN_DISTINCT_RATIO = 0.50
 MIN_MEAN_WORD_LEN = 2.0
 MAX_MEAN_WORD_LEN = 12.0
+
+# repetition-family thresholds (Gopher-flavored); a separate table so
+# the flagship keep decision (and its goldens) stays stable
+MAX_DUP_LINE_FRACTION = 0.30
+MAX_TOP_BIGRAM_FRACTION = 0.20
+MAX_ELLIPSIS_LINE_FRACTION = 0.30
+MAX_BULLET_LINE_FRACTION = 0.90
+
+# (heuristic, lo, hi): a row keeps a page iff lo <= value <= hi
+KEEP_RULES = (
+    ("n_words", MIN_WORDS, MAX_WORDS),
+    ("symbol_ratio", None, MAX_SYMBOL_RATIO),
+    ("stopword_fraction", MIN_STOPWORD_FRACTION, None),
+    ("distinct_ratio", MIN_DISTINCT_RATIO, None),
+    ("mean_word_len", MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN),
+)
+REPETITION_RULES = (
+    ("dup_line_fraction", None, MAX_DUP_LINE_FRACTION),
+    ("top_bigram_fraction", None, MAX_TOP_BIGRAM_FRACTION),
+    ("ellipsis_line_fraction", None, MAX_ELLIPSIS_LINE_FRACTION),
+    ("bullet_line_fraction", None, MAX_BULLET_LINE_FRACTION),
+)
+
+
+def passes(value, lo, hi):
+    """One rules row as a predicate: a Column for a Column value, SQL
+    text for a SQL string value."""
+    if isinstance(value, str):
+        if lo is None:
+            return f"{value} <= {hi}"
+        if hi is None:
+            return f"{value} >= {lo}"
+        return f"{value} between {lo} and {hi}"
+    if lo is None:
+        return value <= hi
+    if hi is None:
+        return value >= lo
+    return value.between(lo, hi)
+
+
+def keep_of(values: dict, rules=KEEP_RULES):
+    """Conjunction of ``rules`` in table order over ``values``
+    (heuristic → Column, or heuristic → SQL text)."""
+    tests = [passes(values[h], lo, hi) for h, lo, hi in rules]
+    if isinstance(tests[0], str):
+        return f"({' and '.join(tests)})"
+    return reduce(operator.and_, tests)
 
 
 def _sql_quote_list(words: tuple[str, ...]) -> str:
@@ -51,8 +108,50 @@ def words_sql(text: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# heuristic columns
+# keep-rule heuristics over a word array
 # ---------------------------------------------------------------------------
+
+def word_heuristics(text: Column, w: Column) -> dict[str, Column]:
+    """The five ``KEEP_RULES`` values of ``text`` over its word array
+    ``w`` (``words_expr(text)`` or a column/lambda slot holding it).
+
+    mean_word_len: chars per whitespace token; symbol_ratio: fraction
+    of non-[A-Za-z0-9 ] characters; distinct_ratio: distinct-token
+    ratio (low values flag boilerplate repetition)."""
+    n = F.size(w)
+    nz = F.nullif(n, F.lit(0))
+    return {
+        "n_words": n,
+        "mean_word_len": F.round(
+            (F.length(F.regexp_replace(F.trim(text), r"\s+", "")) / nz)
+            .cast("double"), 6),
+        "symbol_ratio": F.round(
+            F.length(F.regexp_replace(text, "[A-Za-z0-9 ]", "")).cast("double")
+            / F.nullif(F.length(text), F.lit(0)), 6),
+        "distinct_ratio": F.round(
+            F.size(F.array_distinct(w)).cast("double") / nz, 6),
+        "stopword_fraction": F.round(
+            F.size(F.filter(w, lambda x: x.isin(*STOPWORDS))).cast("double")
+            / nz, 6),
+    }
+
+
+def word_heuristics_sql(text: str, w: str) -> dict[str, str]:
+    nz = f"nullif(len({w}), 0)"
+    return {
+        "n_words": f"len({w})",
+        "mean_word_len": (
+            f"round(length(regexp_replace(trim({text}), '\\s+', '', 'g'))"
+            f" / {nz}, 6)"),
+        "symbol_ratio": (
+            f"round(length(regexp_replace({text}, '[A-Za-z0-9 ]', '', 'g'))"
+            f" / nullif(length({text}), 0), 6)"),
+        "distinct_ratio": f"round(len(list_distinct({w})) / {nz}, 6)",
+        "stopword_fraction": (
+            f"round(len(list_filter({w}, x -> x in "
+            f"({_sql_quote_list(STOPWORDS)}))) / {nz}, 6)"),
+    }
+
 
 def n_chars_expr(text: Column) -> Column:
     return F.length(text)
@@ -63,70 +162,43 @@ def n_chars_sql(text: str) -> str:
 
 
 def n_words_expr(text: Column) -> Column:
-    return F.size(words_expr(text))
+    return word_heuristics(text, words_expr(text))["n_words"]
 
 
 def n_words_sql(text: str) -> str:
-    return f"len({words_sql(text)})"
+    return word_heuristics_sql(text, words_sql(text))["n_words"]
 
 
 def mean_word_len_expr(text: Column) -> Column:
-    """Average token length (chars/word over whitespace-tokenized text)."""
-    return F.round(
-        (F.length(F.regexp_replace(F.trim(text), r"\s+", ""))
-         / F.nullif(n_words_expr(text), F.lit(0))).cast("double"),
-        6,
-    )
+    return word_heuristics(text, words_expr(text))["mean_word_len"]
 
 
 def mean_word_len_sql(text: str) -> str:
-    return (
-        f"round(length(regexp_replace(trim({text}), '\\s+', '', 'g'))"
-        f" / nullif({n_words_sql(text)}, 0), 6)"
-    )
+    return word_heuristics_sql(text, words_sql(text))["mean_word_len"]
 
 
 def symbol_ratio_expr(text: Column) -> Column:
-    """Fraction of non-[A-Za-z0-9 ] characters."""
-    stripped = F.regexp_replace(text, "[A-Za-z0-9 ]", "")
-    return F.round(
-        F.length(stripped).cast("double") / F.nullif(F.length(text), F.lit(0)), 6
-    )
+    return word_heuristics(text, words_expr(text))["symbol_ratio"]
 
 
 def symbol_ratio_sql(text: str) -> str:
-    return (
-        f"round(length(regexp_replace({text}, '[A-Za-z0-9 ]', '', 'g'))"
-        f" / nullif(length({text}), 0), 6)"
-    )
+    return word_heuristics_sql(text, words_sql(text))["symbol_ratio"]
 
 
 def distinct_ratio_expr(text: Column) -> Column:
-    """Distinct-token ratio — low values flag boilerplate repetition."""
-    w = words_expr(text)
-    return F.round(
-        F.size(F.array_distinct(w)).cast("double") / F.nullif(F.size(w), F.lit(0)), 6
-    )
+    return word_heuristics(text, words_expr(text))["distinct_ratio"]
 
 
 def distinct_ratio_sql(text: str) -> str:
-    w = words_sql(text)
-    return f"round(len(list_distinct({w})) / nullif(len({w}), 0), 6)"
+    return word_heuristics_sql(text, words_sql(text))["distinct_ratio"]
 
 
 def stopword_fraction_expr(text: Column) -> Column:
-    w = words_expr(text)
-    hits = F.size(F.filter(w, lambda x: x.isin(*STOPWORDS)))
-    return F.round(hits.cast("double") / F.nullif(F.size(w), F.lit(0)), 6)
+    return word_heuristics(text, words_expr(text))["stopword_fraction"]
 
 
 def stopword_fraction_sql(text: str) -> str:
-    w = words_sql(text)
-    inlist = _sql_quote_list(STOPWORDS)
-    return (
-        f"round(len(list_filter({w}, x -> x in ({inlist})))"
-        f" / nullif(len({w}), 0), 6)"
-    )
+    return word_heuristics_sql(text, words_sql(text))["stopword_fraction"]
 
 
 # ---------------------------------------------------------------------------
@@ -139,21 +211,6 @@ def lines_expr(text: Column) -> Column:
 
 def lines_sql(text: str) -> str:
     return f"string_split({text}, chr(10))"
-
-
-def dup_line_fraction_expr(text: Column) -> Column:
-    """Gopher: fraction of lines that repeat an earlier line."""
-    ls = lines_expr(text)
-    return F.round(
-        (F.lit(1.0) - F.size(F.array_distinct(ls))
-         / F.nullif(F.size(ls), F.lit(0))).cast("double"),
-        6,
-    )
-
-
-def dup_line_fraction_sql(text: str) -> str:
-    ls = lines_sql(text)
-    return f"round(1.0 - len(list_distinct({ls})) / nullif(len({ls}), 0), 6)"
 
 
 def top_bigram_fraction_expr(text: Column) -> Column:
@@ -174,8 +231,6 @@ def top_bigram_fraction_expr(text: Column) -> Column:
     bound slot makes it once; arithmetic is unchanged, values
     bit-identical to the SQL twin.
     """
-    from .text import let_expr
-
     def body(w: Column) -> Column:
         n = F.size(w)
         # zip_with(w, w[2:]) builds bigrams in O(words): the former
@@ -226,123 +281,91 @@ def top_bigram_fraction_sql(text: str) -> str:
     )
 
 
+def line_heuristics(text: Column, ls: Column) -> dict[str, Column]:
+    """The four ``REPETITION_RULES`` values of ``text`` over its line
+    array ``ls``: Gopher's fraction of lines repeating an earlier line
+    and top-bigram fraction, C4's fractions of lines ending in an
+    ellipsis and of bullet/numbered-list lines."""
+    nl = F.nullif(F.size(ls), F.lit(0))
+
+    def line_frac(pattern: str) -> Column:
+        return F.round(
+            F.size(F.filter(ls, lambda l: l.rlike(pattern))).cast("double")
+            / nl, 6)
+
+    return {
+        "dup_line_fraction": F.round(
+            (F.lit(1.0) - F.size(F.array_distinct(ls)) / nl)
+            .cast("double"), 6),
+        "top_bigram_fraction": top_bigram_fraction_expr(text),
+        "ellipsis_line_fraction": line_frac(r"\.\.\.\s*$"),
+        "bullet_line_fraction": line_frac(r"^\s*([-*]|\d+\.)\s"),
+    }
+
+
+def line_heuristics_sql(text: str, ls: str) -> dict[str, str]:
+    nl = f"nullif(len({ls}), 0)"
+
+    def line_frac(pattern: str) -> str:
+        return (f"round(len(list_filter({ls}, l -> regexp_matches(l, "
+                f"'{pattern}'))) / {nl}, 6)")
+
+    return {
+        "dup_line_fraction": f"round(1.0 - len(list_distinct({ls})) / {nl}, 6)",
+        "top_bigram_fraction": top_bigram_fraction_sql(text),
+        "ellipsis_line_fraction": line_frac(r"\.\.\.\s*$"),
+        "bullet_line_fraction": line_frac(r"^\s*([-*]|[0-9]+\.)\s"),
+    }
+
+
+def dup_line_fraction_expr(text: Column) -> Column:
+    return line_heuristics(text, lines_expr(text))["dup_line_fraction"]
+
+
+def dup_line_fraction_sql(text: str) -> str:
+    return line_heuristics_sql(text, lines_sql(text))["dup_line_fraction"]
+
+
 def ellipsis_line_fraction_expr(text: Column) -> Column:
-    """C4: fraction of lines ending in an ellipsis."""
-    ls = lines_expr(text)
-    hits = F.size(F.filter(ls, lambda l: l.rlike(r"\.\.\.\s*$")))
-    return F.round(hits.cast("double") / F.nullif(F.size(ls), F.lit(0)), 6)
+    return line_heuristics(text, lines_expr(text))["ellipsis_line_fraction"]
 
 
 def ellipsis_line_fraction_sql(text: str) -> str:
-    ls = lines_sql(text)
-    return (
-        f"round(len(list_filter({ls}, l -> regexp_matches(l, '\\.\\.\\.\\s*$')))"
-        f" / nullif(len({ls}), 0), 6)"
-    )
+    return line_heuristics_sql(text, lines_sql(text))["ellipsis_line_fraction"]
 
 
 def bullet_line_fraction_expr(text: Column) -> Column:
-    """C4: fraction of lines that are bullet/numbered-list items."""
-    ls = lines_expr(text)
-    hits = F.size(F.filter(ls, lambda l: l.rlike(r"^\s*([-*]|\d+\.)\s")))
-    return F.round(hits.cast("double") / F.nullif(F.size(ls), F.lit(0)), 6)
+    return line_heuristics(text, lines_expr(text))["bullet_line_fraction"]
 
 
 def bullet_line_fraction_sql(text: str) -> str:
-    ls = lines_sql(text)
-    return (
-        f"round(len(list_filter({ls}, "
-        f"l -> regexp_matches(l, '^\\s*([-*]|[0-9]+\\.)\\s')))"
-        f" / nullif(len({ls}), 0), 6)"
-    )
+    return line_heuristics_sql(text, lines_sql(text))["bullet_line_fraction"]
 
 
-# repetition-family thresholds (Gopher-flavored); exposed as a separate
-# composite so the flagship keep decision (and its goldens) stays stable
-MAX_DUP_LINE_FRACTION = 0.30
-MAX_TOP_BIGRAM_FRACTION = 0.20
-MAX_ELLIPSIS_LINE_FRACTION = 0.30
-MAX_BULLET_LINE_FRACTION = 0.90
-
-
-def repetition_keep_expr(text: Column) -> Column:
-    """Composite keep over the repetition/line-shape family.
-
-    r07: the lines array is let-bound and shared by the three
-    line-shape heuristics (same finding as keep_expr — codegen CSE
-    does not fully dedupe the repeated split(text, '\\n') trees); each
-    heuristic computes the identical arithmetic over the shared array,
-    so results match the SQL twin bit-for-bit."""
-    from .text import let_expr
-
-    def body(ls: Column) -> Column:
-        nl = F.nullif(F.size(ls), F.lit(0))
-        dup = F.round(
-            (F.lit(1.0) - F.size(F.array_distinct(ls)) / nl).cast("double"), 6)
-        ell = F.round(
-            F.size(F.filter(ls, lambda l: l.rlike(r"\.\.\.\s*$")))
-            .cast("double") / nl, 6)
-        bul = F.round(
-            F.size(F.filter(ls, lambda l: l.rlike(r"^\s*([-*]|\d+\.)\s")))
-            .cast("double") / nl, 6)
-        return (
-            (dup <= MAX_DUP_LINE_FRACTION)
-            & (top_bigram_fraction_expr(text) <= MAX_TOP_BIGRAM_FRACTION)
-            & (ell <= MAX_ELLIPSIS_LINE_FRACTION)
-            & (bul <= MAX_BULLET_LINE_FRACTION)
-        )
-
-    return let_expr(lines_expr(text), body)
-
-
-def repetition_keep_sql(text: str) -> str:
-    return (
-        f"({dup_line_fraction_sql(text)} <= {MAX_DUP_LINE_FRACTION}"
-        f" and {top_bigram_fraction_sql(text)} <= {MAX_TOP_BIGRAM_FRACTION}"
-        f" and {ellipsis_line_fraction_sql(text)} <= {MAX_ELLIPSIS_LINE_FRACTION}"
-        f" and {bullet_line_fraction_sql(text)} <= {MAX_BULLET_LINE_FRACTION})"
-    )
-
+# ---------------------------------------------------------------------------
+# composite keeps
+# ---------------------------------------------------------------------------
+# r07: the composite keeps let-bind the word / line array and every
+# heuristic reads that one slot — codegen CSE does not fully dedupe the
+# repeated split trees (measured 2.2 s → 1.8 s / 1M docs for keep_expr).
 
 def keep_expr(text: Column) -> Column:
-    """Composite keep/drop decision from the heuristic bank.
-
-    r07: the word array is let-bound and shared by the four
-    token-based heuristics instead of re-rendered per heuristic —
-    codegen CSE does not fully deduplicate the repeated
-    split(trim(lower(text))) trees (measured 2.2 s → 1.8 s / 1M docs).
-    Arithmetic is unchanged (each heuristic computes the identical
-    expression over the shared array), so results are bit-identical
-    to the SQL twin."""
-    from .text import let_expr
-
-    def body(w: Column) -> Column:
-        n = F.size(w)
-        stopfrac = F.round(
-            F.size(F.filter(w, lambda x: x.isin(*STOPWORDS))).cast("double")
-            / F.nullif(n, F.lit(0)), 6)
-        distinct = F.round(
-            F.size(F.array_distinct(w)).cast("double")
-            / F.nullif(n, F.lit(0)), 6)
-        mwl = F.round(
-            (F.length(F.regexp_replace(F.trim(text), r"\s+", ""))
-             / F.nullif(n, F.lit(0))).cast("double"), 6)
-        return (
-            n.between(MIN_WORDS, MAX_WORDS)
-            & (symbol_ratio_expr(text) <= MAX_SYMBOL_RATIO)
-            & (stopfrac >= MIN_STOPWORD_FRACTION)
-            & (distinct >= MIN_DISTINCT_RATIO)
-            & mwl.between(MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN)
-        )
-
-    return let_expr(words_expr(text), body)
+    """Composite keep/drop decision: ``KEEP_RULES`` over ``text``."""
+    return let_expr(words_expr(text),
+                    lambda w: keep_of(word_heuristics(text, w)))
 
 
 def keep_sql(text: str) -> str:
-    return (
-        f"({n_words_sql(text)} between {MIN_WORDS} and {MAX_WORDS}"
-        f" and {symbol_ratio_sql(text)} <= {MAX_SYMBOL_RATIO}"
-        f" and {stopword_fraction_sql(text)} >= {MIN_STOPWORD_FRACTION}"
-        f" and {distinct_ratio_sql(text)} >= {MIN_DISTINCT_RATIO}"
-        f" and {mean_word_len_sql(text)} between {MIN_MEAN_WORD_LEN} and {MAX_MEAN_WORD_LEN})"
-    )
+    return keep_of(word_heuristics_sql(text, words_sql(text)))
+
+
+def repetition_keep_expr(text: Column) -> Column:
+    """Composite keep over the repetition/line-shape family:
+    ``REPETITION_RULES`` over ``text``."""
+    return let_expr(lines_expr(text), lambda ls: keep_of(
+        line_heuristics(text, ls), REPETITION_RULES))
+
+
+def repetition_keep_sql(text: str) -> str:
+    return keep_of(line_heuristics_sql(text, lines_sql(text)),
+                   REPETITION_RULES)

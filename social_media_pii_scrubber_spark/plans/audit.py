@@ -20,11 +20,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import quality as Q
 from .partitioning import url_bucket_expr
 
 AUDIT_COLUMNS = [
     "run_id", "bucket", "rows_in", "rows_kept", "rows_dropped",
-    "drop_n_words", "drop_symbol_ratio", "drop_stopword", "drop_distinct",
+    *(f"drop_{h}" for h, _, _ in Q.KEEP_RULES),
 ]
 
 
@@ -33,12 +34,11 @@ def bucket_lineage(scored: DataFrame, run_id: str, n_buckets: int = 256,
     """Per-bucket lineage + per-rule drop attribution in ONE shuffle.
 
     Expects the flagship pipeline output (quality columns + keep).
-    Rule attribution counts how often each heuristic family would have
-    dropped the row on its own — the debugging signal quality pipelines
-    need when a filter change shifts keep rates.
+    Rule attribution (``drop_<heuristic>``, one per ``Q.KEEP_RULES``
+    row) counts how often each rule would have dropped the row on its
+    own — the debugging signal quality pipelines need when a filter
+    change shifts keep rates.
     """
-    from ..functions import quality as Q
-
     b = url_bucket_expr(F.col(url_col), n_buckets)
     return (
         scored.withColumn("bucket", b)
@@ -47,14 +47,8 @@ def bucket_lineage(scored: DataFrame, run_id: str, n_buckets: int = 256,
             F.count(F.lit(1)).alias("rows_in"),
             F.sum(F.col("keep").cast("long")).alias("rows_kept"),
             F.sum((~F.col("keep")).cast("long")).alias("rows_dropped"),
-            F.sum((~F.col("n_words").between(Q.MIN_WORDS, Q.MAX_WORDS)).cast("long")
-                  ).alias("drop_n_words"),
-            F.sum((F.col("symbol_ratio") > Q.MAX_SYMBOL_RATIO).cast("long")
-                  ).alias("drop_symbol_ratio"),
-            F.sum((F.col("stopword_fraction") < Q.MIN_STOPWORD_FRACTION).cast("long")
-                  ).alias("drop_stopword"),
-            F.sum((F.col("distinct_ratio") < Q.MIN_DISTINCT_RATIO).cast("long")
-                  ).alias("drop_distinct"),
+            *(F.sum((~Q.passes(F.col(h), lo, hi)).cast("long"))
+              .alias(f"drop_{h}") for h, lo, hi in Q.KEEP_RULES),
         )
         .withColumn("run_id", F.lit(run_id))
         .select(AUDIT_COLUMNS)

@@ -45,33 +45,19 @@ class PipelineResult:
 
 
 def quality_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the heuristic bank as pure column expressions.
+    """Attach ``n_chars`` and the ``Q.word_heuristics`` bank as pure
+    column expressions.
 
     r07: the word array is computed ONCE into a temporary column and
-    the four token-based heuristics read it, instead of each
-    re-rendering split(trim(lower(text))) — codegen CSE does not fully
-    deduplicate the repeated split trees (same finding as
-    quality.keep_expr). The two-step projection survives the optimizer
-    because CollapseProject keeps a non-cheap alias that is referenced
-    more than once. Each heuristic computes the identical arithmetic
-    over the shared array, so values are bit-identical to the SQL
-    twins."""
+    the token-based heuristics read it, instead of each re-rendering
+    split(trim(lower(text))) — codegen CSE does not fully deduplicate
+    the repeated split trees (same finding as quality.keep_expr). The
+    two-step projection survives the optimizer because CollapseProject
+    keeps a non-cheap alias that is referenced more than once."""
     t = F.col(text_col)
-    w = F.col("_qwords")
-    n = F.size(w)
-    nz = F.nullif(n, F.lit(0))
     return df.withColumn("_qwords", Q.words_expr(t)).withColumns({
         "n_chars": Q.n_chars_expr(t),
-        "n_words": n,
-        "mean_word_len": F.round(
-            (F.length(F.regexp_replace(F.trim(t), r"\s+", "")) / nz)
-            .cast("double"), 6),
-        "symbol_ratio": Q.symbol_ratio_expr(t),
-        "distinct_ratio": F.round(
-            F.size(F.array_distinct(w)).cast("double") / nz, 6),
-        "stopword_fraction": F.round(
-            F.size(F.filter(w, lambda x: x.isin(*Q.STOPWORDS)))
-            .cast("double") / nz, 6),
+        **Q.word_heuristics(t, F.col("_qwords")),
     }).drop("_qwords")
 
 
@@ -112,14 +98,8 @@ def filter_scrub_pipeline(
     # projections above ArrowEvalPython don't get codegen, so pushing
     # the regex bank up there would fall back to interpreted eval.
     df = quality_columns(df)
-    heuristic_keep = (
-        F.col("n_words").between(Q.MIN_WORDS, Q.MAX_WORDS)
-        & (F.col("symbol_ratio") <= Q.MAX_SYMBOL_RATIO)
-        & (F.col("stopword_fraction") >= Q.MIN_STOPWORD_FRACTION)
-        & (F.col("distinct_ratio") >= Q.MIN_DISTINCT_RATIO)
-        & F.col("mean_word_len").between(Q.MIN_MEAN_WORD_LEN, Q.MAX_MEAN_WORD_LEN)
-    )
-    df = df.withColumn("keep", heuristic_keep)
+    df = df.withColumn(
+        "keep", Q.keep_of({h: F.col(h) for h, _, _ in Q.KEEP_RULES}))
     df = df.withColumn("scrubbed_text", scrub_bank_expr(F.col("text")))
 
     if use_toxicity:
@@ -186,6 +166,9 @@ def pipeline_oracle_sql(pages_cte: str, cfg: ScrubConfig | None = None,
             f"lang from ({pages_cte})"
         )
     keep = Q.keep_sql("text")
+    heuristics = "".join(
+        f" {v} as {h}," for h, v in
+        Q.word_heuristics_sql("text", Q.words_sql("text")).items())
     scrub = scrub_bank_sql("text")
     tox_cols = ""
     if use_toxicity:
@@ -197,11 +180,7 @@ def pipeline_oracle_sql(pages_cte: str, cfg: ScrubConfig | None = None,
         f"select url, warc_ts, lang,"
         f" {langid_sql('text')} as pred_lang,"
         f" {Q.n_chars_sql('text')} as n_chars,"
-        f" {Q.n_words_sql('text')} as n_words,"
-        f" {Q.mean_word_len_sql('text')} as mean_word_len,"
-        f" {Q.symbol_ratio_sql('text')} as symbol_ratio,"
-        f" {Q.distinct_ratio_sql('text')} as distinct_ratio,"
-        f" {Q.stopword_fraction_sql('text')} as stopword_fraction,"
+        f"{heuristics}"
         f"{tox_cols}"
         f" {keep} as keep,"
         f" {scrub} as scrubbed_text"

@@ -94,6 +94,7 @@ def test_all_twins_agree(spark, corpora):
         Q.stopword_fraction_expr(F.col("t")).alias("sw"),
         Q.mean_word_len_expr(F.col("t")).alias("mwl"),
         Q.distinct_ratio_expr(F.col("t")).alias("dr"),
+        Q.keep_expr(F.col("t")).alias("keep"),
         L.langid_expr(F.col("t")).alias("lang"),
         T.bpe_ish_token_count_expr(F.col("t")).alias("bpe"),
         T.fingerprint_expr(F.col("t")).alias("fp"),
@@ -127,6 +128,7 @@ def test_all_twins_agree(spark, corpora):
         f"select {S.scrub_bank_sql('t')} as scrub, {Q.n_words_sql('t')} as nw, "
         f"{Q.symbol_ratio_sql('t')} as sr, {Q.stopword_fraction_sql('t')} as sw, "
         f"{Q.mean_word_len_sql('t')} as mwl, {Q.distinct_ratio_sql('t')} as dr, "
+        f"{Q.keep_sql('t')} as keep, "
         f"{L.langid_sql('t')} as lang, {T.bpe_ish_token_count_sql('t')} as bpe, "
         f"{T.fingerprint_sql('t')} as fp, {T.rolling_hash_sql('t')} as rh, "
         f"{Q.dup_line_fraction_sql('t')} as dlf, "
