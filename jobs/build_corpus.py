@@ -25,16 +25,17 @@ docs cost O(m²) candidate pairs — collapsing them first (one
 fingerprint groupBy) bounds every LSH bucket by the DISTINCT-text
 count, which is what production MinHash pipelines do.
 
-Shuffle budget of the composed plan (PLANS.md "build_corpus" section
-audits the physical plan): each stage contributes exactly its
-standalone exchanges, none re-derived — canonical dedup (1 agg + the
-co-partitioned join), line dedup (1 reused fingerprint exchange + doc
-reassembly), exact dedup (1 agg + semi join), LSH chain (signature
-agg, reused band exchange, verify joins, bounded CC iterations), host
-rollup (1 agg + anti join), classifier (1 explode-agg + join-back),
-mix (1 per-stratum window sort), pack (1 window over the slim
-(id, n_tok) projection + join-back). The quality gate and the final
-scrub are pure codegen projections — no exchange.
+Shuffle budget of the composed plan (tests/test_plan_shapes.py
+test_corpus_build_final_stage_reads_checkpoints pins the final
+stage): each stage contributes exactly its standalone exchanges,
+none re-derived — canonical dedup (1 agg + the co-partitioned join),
+line dedup (1 reused fingerprint exchange + doc reassembly), exact
+dedup (1 agg + semi join), LSH chain (signature agg, reused band
+exchange, verify joins, bounded CC iterations), host rollup (1 agg +
+anti join), classifier (1 explode-agg + join-back), mix (1
+per-stratum window sort), pack (1 window over the slim (id, n_tok)
+projection + join-back). The quality gate and the final scrub are
+pure codegen projections — no exchange.
 
 Oracle parity: ``build_corpus_sql`` renders the SAME chain stage by
 stage from each operator's DuckDB twin (CTE per stage, so the SQL
@@ -99,11 +100,14 @@ def build_corpus(pages: DataFrame, *,
     consumed by MORE THAN ONE downstream subtree ('local' =
     localCheckpoint, the single-box default; 'reliable' = durable
     checkpoint dir, mandatory for multi-hour cluster runs — same
-    contract as operators/components.py; None = fully lazy, the
-    pre-r07 behavior). Without it, Spark re-derives the whole upstream
-    chain once per branch: every stage self-joins its input (dedup
-    keep-join, host filter-back, classifier join-back, pack join-back),
-    so the composed lazy plan grew to 558 Exchange nodes with ZERO
+    contract as operators/components.py; None = lazy stage
+    boundaries, the pre-r07 behavior). The mode reaches s3's candidate
+    list too. Connected components in s3 always cuts its per-iteration
+    lineage, in 'local' mode when ``checkpoint`` is None. Without
+    stage cuts, Spark re-derives the whole upstream chain once per
+    branch: every stage self-joins its input (dedup keep-join, host
+    filter-back, classifier join-back, pack join-back), so the
+    composed lazy plan grew to 558 Exchange nodes with ZERO
     reuse (the branches' column pruning makes subtrees non-identical,
     defeating ReusedExchange) and the 100k-page bench paid the
     canonicalize→line-dedup→LSH chain up to 8 times over. Measured
@@ -180,8 +184,10 @@ def build_corpus(pages: DataFrame, *,
     if oracle_profile:
         pairs = jaccard_pairs(d, "text", id_col).select("id_a", "id_b")
     else:
-        pairs = CC.near_dup_pairs_fast(d, "text", id_col)
-    d = mat(dedup_keep_list(d, pairs, id_col)
+        pairs = CC.near_dup_pairs_fast(d, "text", id_col,
+                                       checkpoint=checkpoint)
+    d = mat(dedup_keep_list(d, pairs, id_col,
+                            checkpoint=checkpoint or "local")
             .filter("keep_dedup").drop("keep_dedup"))
 
     # s4: host/domain reputation rollup + filter-back

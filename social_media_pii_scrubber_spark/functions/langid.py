@@ -38,12 +38,6 @@ LANG_ORDER: tuple[str, ...] = ("en", "de", "fr", "es")
 UNKNOWN_LANG = "und"
 
 
-def lang_score_expr(text: Column, lang: str) -> Column:
-    w = words_expr(text)
-    markers = LANG_MARKERS[lang]
-    return F.size(F.filter(w, lambda x: x.isin(*markers)))
-
-
 def lang_score_sql(text: str, lang: str) -> str:
     w = words_sql(text)
     inlist = ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])

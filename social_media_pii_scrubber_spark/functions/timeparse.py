@@ -47,11 +47,6 @@ def parse_when_sql(when: str) -> str:
     )
 
 
-def is_fallback_expr(when: Column) -> Column:
-    """Flag column: true when the value needed the sentinel fallback."""
-    return parse_when_expr(when) == F.lit(SENTINEL_LIT).cast("timestamp")
-
-
 def time_string_expr(ts: Column) -> Column:
     """Reference's 'h:mm AM/PM' rendering (smparserbase.py:66-68),
     platform-independent."""

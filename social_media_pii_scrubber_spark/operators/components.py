@@ -229,7 +229,8 @@ def near_dup_dedup(df: DataFrame, text_col: str, id_col: str,
     J≈0.85 near-dups.
     """
     pairs = near_dup_pairs_fast(df, text_col, id_col,
-                                jaccard_threshold, num_hashes, band_size)
+                                jaccard_threshold, num_hashes, band_size,
+                                checkpoint=checkpoint)
     return dedup_keep_list(df, pairs, id_col, checkpoint=checkpoint)
 
 

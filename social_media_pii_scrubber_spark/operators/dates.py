@@ -13,14 +13,13 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from ..config import ScrubConfig
 
 
 def in_date_range_expr(ts: Column, first_date: datetime, last_date: datetime) -> Column:
-    """P1 — inclusive-bounds window predicate (smparserbase.py:105-108)."""
+    """P1 — inclusive-bounds window predicate (smparserbase.py:105-108);
+    P2 (smparserbase.py:110-112) is ``df.filter`` on it."""
     return ts.between(F.lit(first_date), F.lit(last_date))
 
 
@@ -29,11 +28,6 @@ def in_date_range_sql(ts: str, first_date: datetime, last_date: datetime) -> str
         f"({ts} between timestamp '{first_date:%Y-%m-%d %H:%M:%S}'"
         f" and timestamp '{last_date:%Y-%m-%d %H:%M:%S}')"
     )
-
-
-def filter_by_date(df: DataFrame, ts_col: str, cfg: ScrubConfig) -> DataFrame:
-    """P2 — filter rows to the configured window (smparserbase.py:110-112)."""
-    return df.filter(in_date_range_expr(F.col(ts_col), cfg.first_date, cfg.last_date))
 
 
 def week_bin_expr(ts: Column, last_date: datetime) -> Column:

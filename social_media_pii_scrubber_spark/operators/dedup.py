@@ -107,13 +107,6 @@ def shingles_sql(text: str, k: int = SHINGLE_K) -> str:
     )
 
 
-def minhash_expr(shingles: Column, seed: int) -> Column:
-    """One minhash: min over md5(seed:shingle) hex strings (portable)."""
-    return F.array_min(
-        F.transform(shingles, lambda x: F.md5(F.concat(F.lit(f"{seed}:"), x).cast("binary")))
-    )
-
-
 def minhash_sql(shingles: str, seed: int) -> str:
     return (
         f"list_aggregate(list_transform({shingles}, "
@@ -404,11 +397,6 @@ def simhash_signature_fast(df: DataFrame, text_col: str, id_col: str,
         sig = sig + F.when(F.col(f"v_{j}") > 0, F.lit(val)).otherwise(F.lit(0)) \
             .cast("bigint")
     return agg.select(F.col(id_col), sig.alias("simhash64"))
-
-
-def simhash_hamming_expr(a: Column, b: Column) -> Column:
-    """Hamming distance between two simhash64 signatures."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash_signature_sql(table_sql: str, text_col: str, id_col: str,

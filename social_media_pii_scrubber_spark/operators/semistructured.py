@@ -57,10 +57,3 @@ def txt_records_expr(blob: Column) -> Column:
     recs = F.split(blob, r"\n\n")
     valid = F.filter(recs, lambda r: F.length(r) > 2)
     return F.transform(valid, lambda r: F.str_to_map(r, F.lit("\n"), F.lit(": ")))
-
-
-def explode_txt_records(df: DataFrame, blob_col: str) -> DataFrame:
-    """One row per record with a `rec` map column."""
-    return df.select(
-        "*", F.explode(txt_records_expr(F.col(blob_col))).alias("rec")
-    )

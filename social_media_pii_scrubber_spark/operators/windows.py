@@ -27,10 +27,3 @@ def photo_seq(df: DataFrame, part_col: str, order_col: str, out: str = "photo_se
     """W1+F11 — the 0A/0B/…/1A photo counter per group."""
     numbered = seq_number(df, part_col, order_col, out="_n")
     return numbered.withColumn(out, ph_num_expr(F.col("_n"))).drop("_n")
-
-
-def seq_number_sql(table_sql: str, part_col: str, order_col: str, out: str = "seq") -> str:
-    return (
-        f"select *, row_number() over (partition by {part_col} order by {order_col}) - 1"
-        f" as {out} from {table_sql}"
-    )

@@ -158,6 +158,27 @@ def test_classifier_gate_can_drop_all(spark):
     assert out.count() == 0
 
 
+def test_reliable_checkpoint_reaches_every_cut(spark, tmp_path, monkeypatch):
+    """checkpoint='reliable' reaches every lineage cut of the production
+    build, s3's candidate list and connected-components iterations
+    included: with localCheckpoint disabled the build still runs and
+    returns the default build's rows."""
+    kw = dict(id_col="doc_id", classifier_bias=100.0,
+              budgets={"en": 100_000, "de": 100_000},
+              pack_budget=128, pack_buckets=4)
+    pages = _pages(spark)
+    want = sorted(build_corpus(pages, **kw).collect())
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+
+    def no_local(self, eager=True, storageLevel=None):
+        raise AssertionError("localCheckpoint under checkpoint='reliable'")
+
+    # the session's concrete DataFrame class, not the pyspark.sql base
+    monkeypatch.setattr(type(pages), "localCheckpoint", no_local)
+    got = sorted(build_corpus(pages, checkpoint="reliable", **kw).collect())
+    assert want and got == want
+
+
 def test_run_build_corpus_resume_skips_done_buckets(spark, tmp_path):
     out_dir = str(tmp_path / "corpus")
     kw = dict(id_col="doc_id", oracle_profile=True,

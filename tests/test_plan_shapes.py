@@ -6,9 +6,12 @@ tests pin the plan properties the engine's performance depends on
 scan, self-joins reuse exchanges, aggregations stay partial).
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as E
 from social_media_pii_scrubber_spark.config import ScrubConfig
 from social_media_pii_scrubber_spark.operators.dedup import (
     exact_dedup, lsh_candidate_pairs,
@@ -316,3 +319,214 @@ def test_fix_mojibake_pure_codegen_projection(spark, sf_dir):
     assert "ArrowEvalPython" not in p
     assert "Exchange hashpartitioning" not in scan_to_agg.replace(
         "Exchange SinglePartition", "")  # only the final agg gather
+
+
+# Plan properties of the gate entries: each test below builds one
+# ``queries()`` entry over the sf0.01 tables, the frames
+# ``check_oracle.py`` value-checks.
+
+def entry(spark, name):
+    return E.queries()[name](spark, E.ORACLE_SF)
+
+
+class Node:
+    """One physical operator, with AQE wrappers, query stages, shuffle
+    reads and codegen spans unwrapped."""
+
+    def __init__(self, j):
+        out = [j.output().apply(i) for i in range(j.output().size())]
+        self.name = j.nodeName()
+        self.desc = j.simpleString(10_000)
+        self.cols = [a.name() for a in out]
+        self.types = [a.dataType().typeName() for a in out]
+        self.children = [_tree(j.children().apply(i))
+                         for i in range(j.children().size())]
+
+    def walk(self):
+        yield self
+        for c in self.children:
+            yield from c.walk()
+
+
+def _tree(j):
+    name = j.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _tree(j.executedPlan())
+    if name.endswith("QueryStage"):
+        return _tree(j.plan())
+    if name in ("AQEShuffleRead", "InputAdapter") \
+            or name.startswith("WholeStageCodegen"):
+        return _tree(j.child())
+    return Node(j)
+
+
+def tree_of(df):
+    """The physical plan as a Node tree; run ``df.collect()`` first to
+    get AQE's final plan."""
+    return _tree(df._jdf.queryExecution().executedPlan())
+
+
+def final_tree(df):
+    df.collect()
+    return tree_of(df)
+
+
+def _input_of(node):
+    """The single child, looking through a SortAggregate's Sort."""
+    (child,) = node.children
+    return _input_of(child) if child.name == "Sort" else child
+
+
+def assert_combines_map_side(final):
+    """``final`` aggregate reads one Exchange fed by its partial (or
+    partial-merge) aggregate."""
+    ex = _input_of(final)
+    assert ex.name == "Exchange", ex.desc
+    partial = _input_of(ex)
+    assert partial.name == final.name, partial.desc
+    assert "partial_" in partial.desc or "merge_" in partial.desc, partial.desc
+
+
+def has_broadcast_hint(df) -> bool:
+    return "strategy=broadcast" in df._jdf.queryExecution() \
+        .optimizedPlan().toString()
+
+
+def test_flagship_langid_counts_each_marker_once(spark):
+    """The langid split and the four per-language marker counts are
+    let-bound: each ``size(filter(words, x IN markers))`` appears once
+    in the projection, not once per CASE branch that compares it."""
+    from social_media_pii_scrubber_spark.functions.langid import (
+        LANG_MARKERS, LANG_ORDER,
+    )
+
+    p = plan_of(entry(spark, "flagship_pipeline"))
+    for lang in LANG_ORDER:
+        markers = f"IN ({','.join(LANG_MARKERS[lang])})"
+        assert p.count(markers) == 1, (lang, p.count(markers))
+
+
+@pytest.mark.parametrize("name", ["line_dedup", "paragraph_dedup"])
+def test_line_dedup_ships_only_fingerprints(spark, name):
+    """Only (id, pos, h1, h2) rows of qualifying lines cross the
+    fingerprint Exchange; no exchange downstream of the line explode
+    carries a string, and the one fingerprint Exchange is reused by the
+    first-occurrence aggregate and the join probe. Checked on the static
+    plan (AQE off): at sf0.01 paragraph_dedup finds no duplicate, and
+    AQE's empty-relation rule then drops the whole dedup branch from
+    the final plan."""
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        root = tree_of(entry(spark, name))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    exchanges = [n for n in root.walk() if "Exchange" in n.name]
+    below_explode = [n for n in exchanges
+                     if any(m.name == "Generate" for m in n.walk())]
+    assert below_explode
+    assert not [n.desc for n in below_explode if "string" in n.types]
+    fp = [n for n in exchanges if n.cols == ["_id", "_pos", "_h1", "_h2"]]
+    assert [n.name for n in fp].count("Exchange") == 1, [n.desc for n in fp]
+    assert "ReusedExchange" in [n.name for n in fp], [n.desc for n in fp]
+
+
+def test_host_reputation_one_exchange_between_partial_and_final(spark):
+    """The host rollup is one map-side-combined groupBy(host): its final
+    HashAggregate reads one Exchange whose input is a partial
+    HashAggregate."""
+    root = final_tree(entry(spark, "host_reputation"))
+    final = next(n for n in root.walk()
+                 if n.name == "HashAggregate" and "n_pages" in n.cols)
+    assert_combines_map_side(final)
+
+
+@pytest.mark.parametrize(
+    "name", ["host_filter", "dedup_keep_list", "incremental_dedup"])
+def test_corpus_sized_join_has_no_broadcast_hint(spark, name):
+    """The bad-host list, the dedup drop-list and the previous
+    snapshot's fingerprints grow with the corpus: their joins are plain
+    equi-joins (AQE may still broadcast them when small), never a
+    broadcast hint."""
+    assert not has_broadcast_hint(entry(spark, name))
+
+
+def test_web_preprocess_no_cartesian_scrub_once(spark):
+    """The composed preprocess chain joins on keys only (no cartesian
+    or nested-loop join) and evaluates the scrub bank once."""
+    root = final_tree(entry(spark, "web_preprocess"))
+    names = [n.name for n in root.walk()]
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
+    scrub = [n for n in root.walk() if "{{TIMESTAMP}}" in n.desc]
+    assert len(scrub) == 1 and scrub[0].desc.count("{{TIMESTAMP}}") == 1
+
+
+def test_substring_dup_count_partial_before_exchange(spark):
+    """The window-occurrence count is a groupBy(wh) that combines
+    map-side: its final aggregate reads an Exchange fed by a partial
+    count, so a window repeated a million times ships one row per task."""
+    root = final_tree(entry(spark, "substring_dup"))
+    final = next(n for n in root.walk()
+                 if n.name == "HashAggregate" and n.cols == ["wh", "occ"])
+    assert_combines_map_side(final)
+    assert "hashpartitioning(wh" in _input_of(final).desc
+
+
+def test_lsh_signature_partial_before_exchange(spark):
+    """The minhash signature's min aggregates combine map-side: one row
+    per (task, doc) crosses the id Exchange, not one per shingle."""
+    root = final_tree(entry(spark, "lsh_pairs"))
+    finals = [n for n in root.walk() if n.name.endswith("Aggregate")
+              and "mh_0" in n.cols and "partial_min" not in n.desc]
+    assert finals
+    for final in finals:
+        assert_combines_map_side(final)
+
+
+def test_ivf_topk_cell_assignment_and_query_broadcast(spark):
+    """Cell assignment is a per-row projection: no hash Exchange and no
+    Python below it (the only exchange allowed there is
+    ensure_min_parallelism's round-robin fan-out of a small input). The
+    probe join broadcasts the small query side."""
+    root = final_tree(entry(spark, "ivf_topk"))
+    cell = next(n for n in root.walk()
+                if n.name == "Project" and "cell" in n.cols
+                and "match_id" in n.cols)
+    below = [n for n in cell.walk()][1:]
+    assert not [n.desc for n in below if "hashpartitioning" in n.desc]
+    assert not [n for n in below if "EvalPython" in n.name]
+    (probe,) = [n for n in root.walk() if "Join" in n.name]
+    assert probe.name == "BroadcastHashJoin", probe.desc
+    (build,) = [c for c in probe.children if c.name == "BroadcastExchange"]
+    assert "query_id" in build.cols and "match_id" not in build.cols
+
+
+def test_ccnet_buckets_one_window_sort_by_lang(spark):
+    """The exact-rank terciles are one window pass per language: one
+    Exchange hash-partitioned on lang and one Sort led by lang, shared
+    by the rank and the count Window operators."""
+    root = final_tree(entry(spark, "ccnet_buckets"))
+    exchanges = [n for n in root.walk() if "Exchange" in n.name]
+    sorts = [n for n in root.walk() if n.name == "Sort"]
+    windows = [n for n in root.walk() if n.name == "Window"]
+    assert len(exchanges) == 1 and "hashpartitioning(lang" in exchanges[0].desc
+    assert len(sorts) == 1 and sorts[0].desc.startswith("Sort [lang")
+    specs = [s for n in windows
+             for s in re.findall(r"windowspecdefinition\((\w+)", n.desc)]
+    assert specs and set(specs) == {"lang"}, specs
+
+
+def test_corpus_build_final_stage_reads_checkpoints(spark):
+    """The default build materializes each multi-consumer stage, so its
+    returned plan is only the last stage: the pack window and its
+    join-back over the s7 checkpoint, read twice. Two shuffle Exchanges
+    (pack bucket, join key) and nothing re-derived from the sources; no
+    broadcast hint on any side."""
+    df = entry(spark, "corpus_build")
+    logical = df._jdf.queryExecution().optimizedPlan().toString()
+    assert logical.count("LogicalRDD") == 2, logical
+    assert not has_broadcast_hint(df)
+    root = final_tree(df)
+    names = [n.name for n in root.walk()]
+    assert names.count("Exchange") == 2, names
+    assert "Scan parquet " not in names

@@ -35,6 +35,29 @@ class TestProfileMetadata:
         assert S.ig_username_from_profile(df) == "maggie.nail"
 
 
+class TestCounts:
+    def test_fb_friends_counts(self, spark):
+        """parse_friends (smparsers.py:26-36): one row, the lengths of
+        the friends and removed-friends lists, no date window."""
+        friends = spark.createDataFrame(
+            [Row(name=n, timestamp=OUT_TS) for n in "abc"])
+        removed = spark.createDataFrame([Row(name="d", timestamp=IN_TS)])
+        rows = S.fb_friends_counts(friends, removed).collect()
+        assert [r.asDict() for r in rows] == [
+            {"Total Friends": 3, "Removed Friends": 1}]
+
+    def test_ig_follow_counts(self, spark):
+        """parse_follow (smparsers.py:274-284): one row, the lengths of
+        the followers and following lists, no date window."""
+        followers = spark.createDataFrame(
+            [Row(value=n, timestamp=IN_TS) for n in "ab"])
+        following = spark.createDataFrame(
+            [Row(value=n, timestamp=OUT_TS) for n in "cde"])
+        rows = S.ig_follow_counts(followers, following).collect()
+        assert [r.asDict() for r in rows] == [
+            {"Followers": 2, "Following": 3}]
+
+
 class TestFBReactions:
     def test_pivot_with_totals(self, spark):
         rows = [
@@ -302,6 +325,34 @@ class TestTT:
         assert rows[0]["Video Link"] == "{{URL}}"
         assert rows[0]["Like(s)"] == "12"  # passthrough, untouched
         assert rows[0].Date == "2021-12-20 10:00:00"
+
+    def test_likes_payload(self, spark):
+        """parse_user_likes (smparsers.py:413-423): in-window rows keep
+        their Date; every link becomes {{URL}}."""
+        likes = spark.createDataFrame([
+            Row(Date="2021-12-20 10:00:00", **{"Video Link": "https://tt/v1"}),
+            Row(Date="2017-01-01 10:00:00", **{"Video Link": "https://tt/v2"}),
+            Row(Date="2022-03-24 00:00:00", **{"Video Link": "https://tt/v3"}),
+        ])
+        rows = S.tt_likes_payload(likes, CFG).collect()
+        assert sorted((r.Date, r["Video Link"]) for r in rows) == [
+            ("2021-12-20 10:00:00", "{{URL}}"),
+            ("2022-03-24 00:00:00", "{{URL}}"),
+        ]
+
+    def test_comments_payload(self, spark):
+        """parse_comments_from_others (smparsers.py:458-469): in-window
+        comments keep their Date and are clean_text-scrubbed."""
+        comments = spark.createDataFrame([
+            Row(Date="2021-12-20 10:00:00", Comment="hi i am Maggie"),
+            Row(Date="2021-12-21 10:00:00", Comment="megs megs"),
+            Row(Date="2017-01-01 10:00:00", Comment="too old"),
+        ])
+        rows = S.tt_comments_payload(comments, CFG).collect()
+        assert sorted((r.Date, r.Comment) for r in rows) == [
+            ("2021-12-20 10:00:00", "hi i am {{FIRSTNAME}}"),
+            ("2021-12-21 10:00:00", "{{ALIAS}} {{ALIAS}}"),
+        ]
 
     def test_follow_counts(self, spark):
         f1 = spark.createDataFrame([Row(Date="2021-12-20 10:00:00", Username="a"),

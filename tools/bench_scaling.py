@@ -2,8 +2,8 @@
 
 Sandbox stand-in for the north rule's two-cluster-size criterion
 (N vs 4N executors): the SAME flagship filter+scrub job over the SAME
-parquet input at local[8] and local[32]. Reports throughput at both
-plus efficiency = (T8/T32)/4 into stdout (and is summarized in
+parquet input at local[N] and local[4N]. Reports throughput at both
+plus efficiency = (T4N/TN)/4 into stdout (and is summarized in
 BENCH.md / BASELINE.md).
 
 Each level runs in its own subprocess → fresh JVM, no warm-cache bias
@@ -11,9 +11,8 @@ toward the second run; the corpus is written once beforehand so both
 levels read identical bytes.
 
 Usage: python tools/bench_scaling.py [rows] [N] [4N] [job]
-(default pair 8/32; pass e.g. `2 8` for the N=2 vs 4N=8 pair — useful
-because this shared host cannot scale ANY workload 8→32 at much above
-~0.75 efficiency, see BENCH.md)
+(default pair 1/4, which fits a 4-core box; on a larger box pass e.g.
+`2 8` or `8 32`)
 
 ``job`` picks the measured plan (VERDICT r05 item 8 — the flagship is
 scan+UDF bound, so the N→4N claim also needs a shuffle-dominated
@@ -124,8 +123,8 @@ spark.stop()
 
 def main() -> None:
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 1_500_000
-    lo = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    hi = int(sys.argv[3]) if len(sys.argv) > 3 else 32
+    lo = int(sys.argv[2]) if len(sys.argv) > 2 else 1
+    hi = int(sys.argv[3]) if len(sys.argv) > 3 else 4
     job = sys.argv[4] if len(sys.argv) > 4 else "flagship"
     assert hi == 4 * lo, "pair must be N and 4N"
     assert job in ("flagship", "line_dedup"), f"unknown job {job!r}"
@@ -141,7 +140,7 @@ def main() -> None:
             "import sys; sys.path.insert(0, {repo!r})\n"
             "from social_media_pii_scrubber_spark.session import get_spark\n"
             "from social_media_pii_scrubber_spark.sources.webpages import generate_webpages\n"
-            "spark = get_spark(master='local[32]', shuffle_partitions=32)\n"
+            f"spark = get_spark(master='local[{hi}]', shuffle_partitions=32)\n"
             f"generate_webpages(spark, {rows}, partitions=128).write.mode('overwrite').parquet({src!r})\n"
             "spark.stop()\n"
         ).format(repo=REPO)
@@ -152,13 +151,12 @@ def main() -> None:
         print(f"reusing corpus at {src}", file=sys.stderr)
 
     results = {}
-    # Same heap both legs. SCALING_HEAP sizes it to the JOB: the heap
-    # is pre-touched, and in a degraded host epoch the pre-touch
-    # itself runs the slow serialized-mmap path (48g measured at 7+
-    # minutes of 20-core spin) — a scan+shuffle job like line_dedup
-    # needs only the 8g default, so don't pay 48g unless the job does.
-    env = dict(os.environ,
-               SPARK_DRIVER_MEMORY=os.environ.get("SCALING_HEAP", "48g"))
+    # Same heap both legs: the session's (8g unless SPARK_DRIVER_MEMORY
+    # says otherwise). SCALING_HEAP overrides it for a job that needs
+    # more; the heap is pre-touched, so size it to the box.
+    env = dict(os.environ)
+    if "SCALING_HEAP" in os.environ:
+        env["SPARK_DRIVER_MEMORY"] = os.environ["SCALING_HEAP"]
     for cores in (lo, hi):
         print(f"running {job} at local[{cores}]...", file=sys.stderr)
         proc = subprocess.run(

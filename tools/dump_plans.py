@@ -1,26 +1,20 @@
-"""Dump physical plans, for the committed audit or a before/after diff.
+"""Dump formatted physical plans for a before/after diff.
 
-The plan IS the scale contract — this makes the per-round plan audit a
-committed, diffable artifact.
+    python tools/dump_plans.py OUT_DIR [NAME…]
 
-    python tools/dump_plans.py                  # rewrites PLANS.md
-    python tools/dump_plans.py OUT_DIR [NAME…]  # formatted plans → OUT_DIR
+Writes ``explain('formatted')`` of the bench-shaped queries — built the
+way bench.py builds them, over a 10 000-row generated web corpus and
+the ``$SPARK_GRAFT_SF_DIR`` tables (plan shape does not depend on row
+count) — plus the ``queries()`` entries NAME… at sf0.01, one
+``OUT_DIR/<name>.txt`` each. The q16 corpus build and q4c's pair stage
+are also dumped with ``checkpoint=None``, so every stage shows in one
+plan instead of only the last stage over checkpointed inputs. Run it
+on two checkouts and ``diff -r`` the directories: volatile ids
+(``#N``, ``plan_id=N``, lambda variables ``x_N``, RDD ids) are
+normalized, so only plan shape differs.
 
-Without arguments: each PLANS.md section records the properties the
-plan-shape tests pin (fused Python barrier, pushdown, ReusedExchange,
-partial aggregation, no forced broadcast) next to the finalized
-(AQE) plan of that ``queries()`` entry at sf0.01.
-
-With OUT_DIR: ``explain('formatted')`` of the bench-shaped queries —
-built the way bench.py builds them, over a 10 000-row generated web
-corpus and the ``$SPARK_GRAFT_SF_DIR`` tables (plan shape does not
-depend on row count) — plus the ``queries()`` entries NAME… at sf0.01,
-one ``OUT_DIR/<name>.txt`` each. The q16 corpus build and q4c's pair
-stage are also dumped with ``checkpoint=None``, so every stage shows
-in one plan instead of only the last stage over checkpointed inputs. Run it on two checkouts and
-``diff -r`` the directories: volatile ids (``#N``, ``plan_id=N``,
-lambda variables ``x_N``, RDD ids) are normalized, so only plan shape
-differs.
+The plan properties performance depends on are asserted by
+``tests/test_plan_shapes.py``; this tool is for reviewing a change.
 """
 import io
 import os
@@ -38,87 +32,6 @@ import __spark_entry__ as E  # noqa: E402
 from social_media_pii_scrubber_spark.config import ScrubConfig  # noqa: E402
 from social_media_pii_scrubber_spark.session import get_spark  # noqa: E402
 
-# (queries() key, what to look for in the plan)
-SECTIONS = [
-    ("flagship_pipeline",
-     "date filter reaches PushedFilters; heuristics + scrub in one "
-     "WholeStageCodegen span; zero Python (column-only rendering); "
-     "langid is ONE-PASS (r06): the word split and the four "
-     "per-language marker counts are let_expr-bound — each "
-     "size(filter(...)) appears exactly once in the projection "
-     "instead of re-stated per CASE branch"),
-    ("line_dedup",
-     "r07 slim-fingerprint topology: only QUALIFYING lines explode, as "
-     "(id, pos, h1, h2) rows — line TEXT never crosses an exchange; "
-     "the single 128-bit-fingerprint Exchange is REUSED by the "
-     "first-occurrence aggregate (partial_min map-side) and the join "
-     "probe; non-first occurrences collapse to sparse per-doc removal "
-     "lists and only docs that lose lines are rebuilt"),
-    ("host_reputation",
-     "one partial-agg'd groupBy(host) rollup (two HashAggregates "
-     "around one exchange); ratios are projections of exact integer "
-     "aggregates"),
-    ("host_filter",
-     "reputation filter-back via LeftAnti equi-join on host with NO "
-     "forced broadcast hint (AQE decides; the host dimension grows "
-     "with the corpus)"),
-    ("lsh_pairs",
-     "minhash subtree computed once (ReusedExchange on the band key); "
-     "signature partial-aggregates map-side"),
-    ("dedup_keep_list",
-     "drop-list join carries NO broadcast hint (AQE decides at runtime)"),
-    ("web_preprocess",
-     "the full preprocess chain composes without a cartesian product or "
-     "duplicated scrub evaluation"),
-    ("substring_dup",
-     "window-occurrence count partial-aggregates before its exchange"),
-    ("substring_remove",
-     "ONE exchange keyed on the 128-bit xxhash64-pair window "
-     "fingerprint, REUSED by the first-occurrence aggregate and the "
-     "join probe (line_dedup's topology); partial_min map-side; "
-     "removal lists only for docs that lose spans; rebuild is a pure "
-     "codegen projection (let-bound split, indexed filter HOF)"),
-    ("ivf_topk",
-     "cell assignment is a codegen argmax projection (no shuffle); the "
-     "probe join broadcasts the small query side"),
-    ("incremental_dedup",
-     "snapshot anti-join carries no broadcast hint (AQE decides)"),
-    ("dsir_weights",
-     "construction-bounded ratio dimension broadcast into the scoring "
-     "join (forced — static stats mis-estimate it); per-doc logw sum "
-     "partial-aggregates map-side"),
-    ("quality_classifier",
-     "bounded weight dimension broadcast into the scoring join; per-doc "
-     "logit sum partial-aggregates map-side (DSIR's topology)"),
-    ("ccnet_buckets",
-     "one partitioned sort window per language (oracle profile; the "
-     "production path tags by sampled thresholds with no sort)"),
-    ("paragraph_dedup",
-     "line_dedup's exact topology at blank-line granularity "
-     "(r07 slim-fingerprint shape, see line_dedup); sep is a "
-     "regex-escaped literal so split and rejoin agree"),
-    ("fix_mojibake",
-     "the 123-pair repair chain is ONE codegen projection: a CASE "
-     "guarded by six contains scans, the nested replace chain "
-     "evaluated only on marker-bearing rows; no exchange, no Python, "
-     "no per-pair expression re-evaluation"),
-    ("global_shuffle",
-     "shard assignment is a pure codegen md5-mod projection; the "
-     "dense in-shard pos costs exactly ONE exchange "
-     "(hashpartitioning on shard) + a per-shard sort for the window "
-     "— the minimum any engine pays to materialize a shuffled order; "
-     "no global sort, no driver collect"),
-    ("corpus_build",
-     "the composed end-to-end job, r07 STAGE-MATERIALIZED: every "
-     "multi-consumer stage boundary is localCheckpointed (lazy "
-     "composition re-derived the upstream chain once per self-joining "
-     "stage — 558 Exchanges, zero reuse, see plans/r07), so the "
-     "dumped plan is the FINAL stage (pack join-back + scrub codegen "
-     "projection) over checkpointed inputs; per-stage plans equal the "
-     "standalone operators' committed shapes; no forced broadcast on "
-     "any corpus-growing side"),
-]
-
 
 def normalize(plan: str) -> str:
     """Strip the ids that change between runs of the same plan."""
@@ -128,11 +41,6 @@ def normalize(plan: str) -> str:
     plan = re.sub(r"RDD\[\d+\]", "RDD[_]", plan)
     return re.sub(r"InMemoryFileIndex\([^)]*\)\[[^\]]*\]",
                   "InMemoryFileIndex[...]", plan)
-
-
-def finalized_plan(df) -> str:
-    df.collect()  # let AQE finalize
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def formatted_plan(df) -> str:
@@ -224,31 +132,11 @@ def dump_dir(spark, out: Path, names: list[str]) -> None:
     print(f"{len(frames)} plans written to {out}")
 
 
-def dump_plans_md(spark) -> None:
-    qs = E.queries()
-    out = [
-        "# PLANS — finalized physical plans of the headline queries",
-        "",
-        f"Generated by `python tools/dump_plans.py` at sf0.01, local[8], "
-        f"AQE on. The pinned properties are asserted by "
-        f"`tests/test_plan_shapes.py`; this file is the human-readable "
-        f"audit trail.",
-        "",
-    ]
-    for name, props in SECTIONS:
-        plan = normalize(finalized_plan(qs[name](spark, E.ORACLE_SF)))
-        out += [f"## {name}", "", f"**Pinned:** {props}", "",
-                "```", plan.rstrip(), "```", ""]
-    (REPO / "PLANS.md").write_text("\n".join(out))
-    print(f"PLANS.md written ({len(SECTIONS)} sections)")
-
-
 def main() -> None:
+    if len(sys.argv) < 2:
+        raise SystemExit(__doc__)
     spark = get_spark(master="local[8]", shuffle_partitions=8)
-    if len(sys.argv) > 1:
-        dump_dir(spark, Path(sys.argv[1]), sys.argv[2:])
-    else:
-        dump_plans_md(spark)
+    dump_dir(spark, Path(sys.argv[1]), sys.argv[2:])
     spark.stop()
 
 

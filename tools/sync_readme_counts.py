@@ -9,8 +9,10 @@ queries()/oracle_sql() or adding tests:
 import re
 import subprocess
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as E  # noqa: E402
 
@@ -20,13 +22,13 @@ def main() -> None:
     n_o = len(E.oracle_sql())
     collected = subprocess.run(
         [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     ).stdout
     m = re.search(r"(\d+) tests collected", collected)
     n_t = int(m.group(1)) if m else None
 
-    path = "/root/repo/README.md"
-    src = open(path).read()
+    path = REPO / "README.md"
+    src = path.read_text()
     src = re.sub(r"\d+ queries, \d+ with exact DuckDB oracles",
                  f"{n_q} queries, {n_o} with exact DuckDB oracles", src)
     src = re.sub(r"# \d+ oracle-matched queries",
@@ -34,7 +36,7 @@ def main() -> None:
     if n_t is not None:
         src = re.sub(r"\d+ tests:", f"{n_t} tests:", src)
         src = re.sub(r"# \d+ tests", f"# {n_t} tests", src)
-    open(path, "w").write(src)
+    path.write_text(src)
     print(f"README synced: {n_q} queries, {n_o} oracles, {n_t} tests")
 
 
