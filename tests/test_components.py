@@ -49,10 +49,14 @@ def test_max_iterations_guard(spark):
     assert all(v <= k for k, v in got.items())
 
 
-def test_reliable_checkpoint_mode(spark, tmp_path):
+def test_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):
     """Same clusters under checkpoint='reliable' (cluster-scale mode:
-    lineage cut to a durable dir instead of executor disks)."""
-    if spark.sparkContext.getCheckpointDir() is None:
+    lineage cut to a durable dir instead of executor disks). Without a
+    checkpoint dir the mode refuses to run; the dir is unset for that
+    check whatever an earlier test set on the shared session."""
+    with monkeypatch.context() as m:
+        m.setattr(type(spark.sparkContext), "getCheckpointDir",
+                  lambda self: None)
         with pytest.raises(ValueError, match="setCheckpointDir"):
             connected_components(_pairs(spark, [(1, 2)]),
                                  checkpoint="reliable").collect()

@@ -415,11 +415,12 @@ def test_line_dedup_ships_only_fingerprints(spark, name):
     plan (AQE off): at sf0.01 paragraph_dedup finds no duplicate, and
     AQE's empty-relation rule then drops the whole dedup branch from
     the final plan."""
+    old = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         root = tree_of(entry(spark, name))
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.adaptive.enabled", old)
     exchanges = [n for n in root.walk() if "Exchange" in n.name]
     below_explode = [n for n in exchanges
                      if any(m.name == "Generate" for m in n.walk())]
@@ -520,8 +521,9 @@ def test_corpus_build_final_stage_reads_checkpoints(spark):
     """The default build materializes each multi-consumer stage, so its
     returned plan is only the last stage: the pack window and its
     join-back over the s7 checkpoint, read twice. Two shuffle Exchanges
-    (pack bucket, join key) and nothing re-derived from the sources; no
-    broadcast hint on any side."""
+    (pack bucket, join key), the two checkpoint reads its only scans
+    (nothing re-derived from the sources), no broadcast hint on any
+    side."""
     df = entry(spark, "corpus_build")
     logical = df._jdf.queryExecution().optimizedPlan().toString()
     assert logical.count("LogicalRDD") == 2, logical
@@ -529,4 +531,5 @@ def test_corpus_build_final_stage_reads_checkpoints(spark):
     root = final_tree(df)
     names = [n.name for n in root.walk()]
     assert names.count("Exchange") == 2, names
-    assert "Scan parquet " not in names
+    scans = [n for n in names if n.startswith("Scan")]
+    assert scans == ["Scan ExistingRDD"] * 2, names
