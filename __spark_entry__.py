@@ -1044,6 +1044,7 @@ def q_corpus_build(spark, sf):
       the host's keep_frac fails the reputation threshold and the
       host's GOOD pages are dropped by the host filter specifically."""
     from jobs.build_corpus import build_corpus
+    from social_media_pii_scrubber_spark.operators.hashing import MD5
 
     _pin_session(spark)
     d = _t(spark, sf, "documents")
@@ -1067,7 +1068,7 @@ def q_corpus_build(spark, sf):
     text = F.when(i % 5 == 0,
                   F.concat(F.lit(_CB_BOILER + "\n"), body)).otherwise(body)
     pages = src.select("doc_id", url.alias("url"), text.alias("text"), "lang")
-    return build_corpus(pages, id_col="doc_id", oracle_profile=True,
+    return build_corpus(pages, id_col="doc_id", family=MD5,
                         pack_budget=512, pack_buckets=8)
 
 

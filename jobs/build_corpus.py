@@ -70,10 +70,9 @@ from social_media_pii_scrubber_spark.operators import packing as PK
 from social_media_pii_scrubber_spark.operators import sampling as SA
 from social_media_pii_scrubber_spark.operators import components as CC
 from social_media_pii_scrubber_spark.operators.components import (
-    _cut_lineage, dedup_keep_list, dedup_keep_list_sql,
+    _cut_lineage, dedup_keep_list_sql,
 )
-from social_media_pii_scrubber_spark.operators.dedup import jaccard_pairs
-from social_media_pii_scrubber_spark.operators.hashing import MD5, XXHASH64
+from social_media_pii_scrubber_spark.operators.hashing import XXHASH64, HashFamily
 
 DEFAULT_BUDGETS = {"en": 50_000, "de": 20_000, "fr": 20_000, "es": 15_000}
 CLASSIFIER_BIAS = -0.25
@@ -83,7 +82,7 @@ PACK_BUCKETS = 64
 
 def build_corpus(pages: DataFrame, *,
                  id_col: str = "doc_id",
-                 oracle_profile: bool = False,
+                 family: HashFamily = XXHASH64,
                  fix_encoding: bool = False,
                  pii_max_bp: int | None = None,
                  classifier_model: tuple | None = None,
@@ -102,8 +101,7 @@ def build_corpus(pages: DataFrame, *,
     checkpoint dir, mandatory for multi-hour cluster runs — same
     contract as operators/components.py; None = lazy stage
     boundaries, the pre-r07 behavior). The mode reaches s3's candidate
-    list too. Connected components in s3 always cuts its per-iteration
-    lineage, in 'local' mode when ``checkpoint`` is None. Without
+    list too (components.near_dup_dedup). Without
     stage cuts, Spark re-derives the whole upstream chain once per
     branch: every stage self-joins its input (dedup keep-join, host
     filter-back, classifier join-back, pack join-back), so the
@@ -122,15 +120,12 @@ def build_corpus(pages: DataFrame, *,
     all int/string, hash-stable: (id, canonical_url, lang, n_tok,
     cum_tokens, logit_fp, bucket, bin, offset, clean_text).
 
-    ``oracle_profile=True`` runs the md5 oracle profile so
-    ``build_corpus_sql`` is an exact twin (with ``classifier_model=None``,
-    whose hash-derived weights the twin renders): s2 exact dedup in the
-    ``MD5`` hash family and s3 near-dup pairs from the oracle's
-    ``jaccard_pairs``. The default is the at-scale production profile:
-    ``XXHASH64`` in s2 and the production near-dup pair stage in s3
-    (its verify step differs from the oracle's, so s3 keeps two
-    branches), with ``classifier_model=(weights_dict, bias)``
-    inference.
+    ``family`` is the hash family of s2's exact dedup and s3's near-dup
+    chain. ``family=MD5`` is the oracle profile, so ``build_corpus_sql``
+    is an exact twin (with ``classifier_model=None``, whose
+    hash-derived weights the twin renders). The default ``XXHASH64`` is
+    the at-scale production profile, usually with
+    ``classifier_model=(weights_dict, bias)`` inference.
 
     ``pii_max_bp`` (opt-in) extends the s5 gate with the PII-density
     DROP policy (functions/scrub.py): pages past ``pii_max_bp`` basis
@@ -176,18 +171,12 @@ def build_corpus(pages: DataFrame, *,
 
     # s2: exact content dedup (collapse identical texts BEFORE LSH —
     # bounds band buckets by distinct-text count; see module doc)
-    keep_exact = DD.exact_dedup(d, "text", id_col,
-                                family=MD5 if oracle_profile else XXHASH64)
+    keep_exact = DD.exact_dedup(d, "text", id_col, family=family)
     d = mat(d.join(keep_exact.select(id_col), on=id_col, how="left_semi"))
 
     # s3: near-dup dedup (pairs → components → min-id keep flag)
-    if oracle_profile:
-        pairs = jaccard_pairs(d, "text", id_col).select("id_a", "id_b")
-    else:
-        pairs = CC.near_dup_pairs_fast(d, "text", id_col,
-                                       checkpoint=checkpoint)
-    d = mat(dedup_keep_list(d, pairs, id_col,
-                            checkpoint=checkpoint or "local")
+    d = mat(CC.near_dup_dedup(d, "text", id_col, family=family,
+                              checkpoint=checkpoint)
             .filter("keep_dedup").drop("keep_dedup"))
 
     # s4: host/domain reputation rollup + filter-back
@@ -250,7 +239,7 @@ def build_corpus_sql(pages_sql: str, *,
                      budgets: dict[str, int] | None = None,
                      pack_budget: int = PACK_BUDGET,
                      pack_buckets: int = PACK_BUCKETS) -> str:
-    """DuckDB twin of ``build_corpus(oracle_profile=True)``: the same
+    """DuckDB twin of ``build_corpus(family=MD5)``: the same
     chain rendered stage by stage from each operator's SQL twin, one
     CTE per stage (nested WITH in a CTE body is fine in DuckDB — the
     dedup_keep_list oracle already relies on it).
@@ -318,7 +307,6 @@ def build_corpus_sql(pages_sql: str, *,
 def run_build_corpus(spark, pages: DataFrame, output_dir: str,
                      run_id: str = "run0", audit_path: str | None = None,
                      n_buckets: int = 16, buckets_per_batch: int = 4,
-                     fail_after: int | None = None,
                      **kw) -> dict:
     """Driver wrapper: composed build + checkpointed bucket-wise write
     (resume skips done buckets) + per-bucket lineage audit rows keyed
@@ -331,7 +319,7 @@ def run_build_corpus(spark, pages: DataFrame, output_dir: str,
     out = build_corpus(pages, **kw)
     result = write_with_checkpoints(
         out, output_dir, n_buckets=n_buckets, url_col="canonical_url",
-        buckets_per_batch=buckets_per_batch, fail_after=fail_after,
+        buckets_per_batch=buckets_per_batch,
     )
     if audit_path:
         lineage = (

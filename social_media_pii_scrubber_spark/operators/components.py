@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .hashing import XXHASH64, HashFamily
+
 
 def _cut_lineage(df: DataFrame, mode: str) -> DataFrame:
     """Cut the iterative plan's lineage. ``local`` = executor-disk
@@ -157,81 +159,38 @@ def dedup_keep_list(df: DataFrame, pairs: DataFrame, id_col: str,
     )
 
 
-def near_dup_pairs_fast(df: DataFrame, text_col: str, id_col: str,
-                        jaccard_threshold: float = 0.8,
-                        num_hashes: int | None = None,
-                        band_size: int | None = None,
-                        checkpoint: str | None = "local") -> DataFrame:
-    """The production near-dup PAIR stage, shared by
-    :func:`near_dup_dedup` and the composed corpus-build job
-    (jobs/build_corpus.py): MinHash-LSH candidates in the ``XXHASH64``
-    family at its production width (``num_hashes`` / ``band_size``
-    override it) → exact shingle-Jaccard verification on candidates
-    only. One home so a recall or threshold fix cannot drift between
-    the two. It stays apart from the oracle's ``dedup.jaccard_pairs``
-    on purpose: that one filters and returns the 6-dp rounded Jaccard
-    over all candidates; this one filters the unrounded value on
-    prefiltered candidates.
-
-    r07: the candidate list is MATERIALIZED (``checkpoint`` — same
-    local/reliable contract as connected_components; None = lazy)
-    before it fans out. It is consumed three times (the two verify
-    joins and the semi prefilter below), and AQE's runtime stage reuse
-    does NOT deduplicate the post-band-exchange join+distinct subtree
-    (measured: the lazy fan-out re-ran it per consumer, 3.8 s →
-    9.9 s). The list is pair-ids only — orders of magnitude smaller
-    than the corpus. With it pinned, verify-side shingles are computed
-    for CANDIDATE docs only via a left_semi prefilter instead of for
-    every doc (the corpus-wide tokenize+shingle pass the verify join
-    used to pay, once per side). Plain joins — the candidate set grows
-    with the corpus (never hint-broadcast); AQE broadcasts it when
-    genuinely small."""
-    from .dedup import lsh_candidate_pairs, shingles_expr
-    from .hashing import XXHASH64
-
-    cands = lsh_candidate_pairs(df, text_col, id_col, num_hashes, band_size,
-                                family=XXHASH64)
-    if checkpoint:
-        cands = _cut_lineage(cands, checkpoint)
-    cand_ids = (cands.select(F.col("id_a").alias(id_col))
-                .union(cands.select(F.col("id_b").alias(id_col)))
-                .distinct())
-    sh = (df.join(cand_ids, on=id_col, how="left_semi")
-          .select(F.col(id_col), shingles_expr(F.col(text_col)).alias("sh")))
-    joined = (
-        cands
-        .join(sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-    )
-    jac = (
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        / F.nullif(F.size(F.array_union("sh_a", "sh_b")), F.lit(0))
-    )
-    return joined.filter(jac >= jaccard_threshold).select("id_a", "id_b")
-
-
 def near_dup_dedup(df: DataFrame, text_col: str, id_col: str,
                    jaccard_threshold: float = 0.8,
                    num_hashes: int | None = None,
                    band_size: int | None = None,
-                   checkpoint: str = "local") -> DataFrame:
-    """The PRODUCTION near-dup chain, end to end:
+                   checkpoint: str | None = "local", *,
+                   family: HashFamily = XXHASH64) -> DataFrame:
+    """The near-dup chain, end to end:
 
-        XXHASH64 MinHash-LSH candidates (128 hashes / 16 bands)
+        MinHash-LSH candidates in ``family`` (default ``XXHASH64``,
+        128 hashes / 16 bands)
           → exact shingle-Jaccard verification (candidates only)
           → connected components (transitive closure)
           → keep_dedup flag per row (min-id representative kept)
 
-    This is the operator a 100-TB training-data pipeline actually runs;
-    the md5 profile (`dedup_keep_list` oracle entry) pins the identical
-    topology against DuckDB at gate scale, and
-    tests/test_dedup_recall.py pins this chain's recall on planted
-    J≈0.85 near-dups.
+    This is the operator a 100-TB training-data pipeline actually runs,
+    and the corpus build's s3 (jobs/build_corpus.py). ``family=MD5`` is
+    the oracle profile of the identical topology, value-checked against
+    DuckDB through the ``corpus_build`` gate entry;
+    tests/test_dedup_recall.py pins the production chain's recall on
+    planted J≈0.85 near-dups.
+
+    ``checkpoint`` (local/reliable, see _cut_lineage) materializes the
+    candidate list; None leaves it lazy. Connected components always
+    cuts its per-iteration lineage, in 'local' mode when
+    ``checkpoint`` is None.
     """
-    pairs = near_dup_pairs_fast(df, text_col, id_col,
-                                jaccard_threshold, num_hashes, band_size,
-                                checkpoint=checkpoint)
-    return dedup_keep_list(df, pairs, id_col, checkpoint=checkpoint)
+    from .dedup import jaccard_pairs
+
+    pairs = jaccard_pairs(df, text_col, id_col, jaccard_threshold,
+                          family=family, num_hashes=num_hashes,
+                          band_size=band_size, checkpoint=checkpoint)
+    return dedup_keep_list(df, pairs, id_col, checkpoint=checkpoint or "local")
 
 
 def dedup_keep_list_sql(table_sql: str, pairs_sql: str, id_col: str) -> str:

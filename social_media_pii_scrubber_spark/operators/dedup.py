@@ -13,15 +13,12 @@ extensions the engine needs as first-class components:
 - SimHash: 16-bit majority-vote signature; near-dups collide exactly.
 - n-gram Jaccard: exact verification on LSH candidate pairs.
 
-Hash families: exact dedup and MinHash-LSH take ``family=``
-(operators/hashing.py: ``MD5`` oracle profile by default, ``XXHASH64``
-production). Two pairs stay apart on purpose. SimHash: md5 hex-digit
-votes → a 16-char bit string vs xxhash64 bit votes → one bigint; one
-function would branch on the family in both the vote and the assembly.
-``jaccard_pairs`` vs ``components.near_dup_pairs_fast``: the oracle
-filters and returns the 6-dp rounded Jaccard, production filters the
-unrounded value on prefiltered candidates; merging them would change
-one side's output.
+Hash families: exact dedup, MinHash-LSH and the Jaccard pair stage
+take ``family=`` (operators/hashing.py: ``MD5`` oracle profile by
+default, ``XXHASH64`` production). One pair stays apart on purpose.
+SimHash: md5 hex-digit votes → a 16-char bit string vs xxhash64 bit
+votes → one bigint; one function would branch on the family in both
+the vote and the assembly.
 """
 
 from __future__ import annotations
@@ -30,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import let_expr
+from .components import _cut_lineage
 from .hashing import BAND_SIZE, MD5, NUM_HASHES, HashFamily
 
 SHINGLE_K = 3          # words per shingle
@@ -247,31 +245,48 @@ def lsh_candidate_pairs_sql(table_sql: str, text_col: str, id_col: str,
 # --- n-gram Jaccard ---------------------------------------------------------
 
 def jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
-                  threshold: float = 0.8) -> DataFrame:
-    """Exact Jaccard over distinct shingles for LSH candidate pairs.
+                  threshold: float = 0.8, *,
+                  family: HashFamily = MD5,
+                  num_hashes: int | None = None,
+                  band_size: int | None = None,
+                  checkpoint: str | None = "local") -> DataFrame:
+    """(id_a, id_b, jaccard): exact shingle Jaccard ≥ ``threshold`` over
+    the MinHash-LSH candidate pairs in ``family`` (its width unless
+    ``num_hashes`` / ``band_size`` override it). The filter reads the
+    unrounded ratio; the returned ``jaccard`` is rounded to 6 dp.
 
-    Candidate generation via LSH keeps this linear-ish; the verification
-    join re-attaches shingle arrays and computes
-    |A∩B| / |A∪B| with native array ops.
+    The candidate list is MATERIALIZED (``checkpoint``: same
+    local/reliable contract as components.connected_components; None =
+    lazy) before it fans out to the two verify joins and the semi
+    prefilter: AQE's runtime stage reuse does NOT deduplicate the
+    post-band-exchange join+distinct subtree (measured r07: the lazy
+    fan-out re-ran it per consumer, 3.8 s → 9.9 s). The list is pair
+    ids only, orders of magnitude smaller than the corpus. Shingles are
+    then computed for CANDIDATE docs only, via a left_semi prefilter,
+    instead of corpus-wide once per verify side. Plain joins: the
+    candidate set grows with the corpus (never hint-broadcast); AQE
+    broadcasts it when genuinely small.
     """
-    cands = lsh_candidate_pairs(df, text_col, id_col)
-    sh = df.select(
-        F.col(id_col), shingles_expr(F.col(text_col)).alias("sh")
-    )
+    cands = lsh_candidate_pairs(df, text_col, id_col, num_hashes, band_size,
+                                family=family)
+    if checkpoint:
+        cands = _cut_lineage(cands, checkpoint)
+    cand_ids = (cands.select(F.col("id_a").alias(id_col))
+                .union(cands.select(F.col("id_b").alias(id_col)))
+                .distinct())
+    sh = (df.join(cand_ids, on=id_col, how="left_semi")
+          .select(F.col(id_col), shingles_expr(F.col(text_col)).alias("sh")))
     joined = (
-        cands.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
+        cands
+        .join(sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+        .join(sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
     )
-    jac = F.round(
+    jac = (
         F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        / F.nullif(F.size(F.array_union("sh_a", "sh_b")), F.lit(0)),
-        6,
+        / F.nullif(F.size(F.array_union("sh_a", "sh_b")), F.lit(0))
     )
-    return (
-        joined.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return (joined.filter(jac >= threshold)
+            .select("id_a", "id_b", F.round(jac, 6).alias("jaccard")))
 
 
 def jaccard_pairs_sql(table_sql: str, text_col: str, id_col: str,
@@ -281,10 +296,10 @@ def jaccard_pairs_sql(table_sql: str, text_col: str, id_col: str,
     return (
         f"with cands as ({cands}), "
         f"sh as (select {id_col}, {sh} as sh from {table_sql}) "
-        f"select id_a, id_b, jac as jaccard from ("
+        f"select id_a, id_b, round(jac, 6) as jaccard from ("
         f"  select id_a, id_b, "
-        f"  round(len(list_intersect(a.sh, b.sh)) * 1.0 "
-        f"        / nullif(len(list_distinct(list_concat(a.sh, b.sh))), 0), 6) as jac "
+        f"  len(list_intersect(a.sh, b.sh)) * 1.0 "
+        f"        / nullif(len(list_distinct(list_concat(a.sh, b.sh))), 0) as jac "
         f"  from cands join sh a on cands.id_a = a.{id_col} "
         f"  join sh b on cands.id_b = b.{id_col}) "
         f"where jac >= {threshold}"

@@ -1,7 +1,10 @@
 """Hash families: the value that picks a dedup or DSIR operator's
 oracle or production profile. ``exact_dedup``, ``minhash_signature``,
-``lsh_candidate_pairs``, ``bucket_distribution`` and ``dsir_weights``
-each have ONE topology and take ``family=``:
+``lsh_candidate_pairs``, ``jaccard_pairs``, ``bucket_distribution`` and
+``dsir_weights`` each have ONE topology and take ``family=``, and so do
+the chains built from them, ``components.near_dup_dedup`` (default
+``XXHASH64``) and ``jobs/build_corpus.py build_corpus`` (default
+``XXHASH64``):
 
 - ``MD5`` (default) — the oracle profile: md5-derived, so the DuckDB
   ``*_sql`` twins reproduce it bit for bit; small widths (4 minhashes in

@@ -83,6 +83,30 @@ def cosine_sql(a: str, b: str) -> str:
     return f"round({dot} / nullif({na} * {nb}, 0.0), 4)"
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The top-k ranking rule every ``*_topk`` shares: per query, rank
+    by (rounded cosine desc, match id asc), so ties at the k-boundary
+    resolve identically in any engine, and keep the first k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("match_id").asc()
+    )
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "match_id", "cosine", "rk")
+    )
+
+
+def _ranked_sql(k: int) -> str:
+    """DuckDB twin of :func:`_rank_topk` over a ``scored`` CTE: the
+    closing ``ranked`` CTE and final select of every ``*_topk_sql``."""
+    return (
+        "ranked as (select *, row_number() over (partition by query_id "
+        "  order by cosine desc, match_id asc) as rk from scored) "
+        f"select query_id, match_id, cosine, rk from ranked where rk <= {k}"
+    )
+
+
 def cosine_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
                 vec_col: str, k: int = 5) -> DataFrame:
     """Exact top-k: (query_id, match_id, cosine), k rows per query.
@@ -108,14 +132,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
         cosine_from_parts_expr(dot_expr(F.col("qvec"), F.col("cvec")),
                                F.col("qnorm"), F.col("cnorm")).alias("cosine"),
     ).filter(F.col("query_id") != F.col("match_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cosine", "rk")
-    )
+    return _rank_topk(scored, k)
 
 
 def cosine_topk_sql(corpus_sql: str, query_pred: str, id_col: str,
@@ -126,9 +143,7 @@ def cosine_topk_sql(corpus_sql: str, query_pred: str, id_col: str,
         f"c as (select {id_col} as match_id, {vec_col} from {corpus_sql}), "
         f"scored as (select query_id, match_id, {cos} as cosine "
         f"  from c cross join q where query_id != match_id), "
-        f"ranked as (select *, row_number() over (partition by query_id "
-        f"  order by cosine desc, match_id asc) as rk from scored) "
-        f"select query_id, match_id, cosine, rk from ranked where rk <= {k}"
+        + _ranked_sql(k)
     )
 
 
@@ -172,14 +187,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
         "query_id", "match_id",
         cosine_expr(F.col("qvec"), F.col("cvec")).alias("cosine"),
     ).filter(F.col("query_id") != F.col("match_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cosine", "rk")
-    )
+    return _rank_topk(scored, k)
 
 
 def make_hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
@@ -376,14 +384,7 @@ def ann_topk_amplified(
         "query_id", "match_id",
         cosine_expr(F.col("qvec"), F.col("cvec")).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cosine", "rk")
-    )
+    return _rank_topk(scored, k)
 
 
 def ann_topk_amplified_sql(
@@ -413,9 +414,7 @@ def ann_topk_amplified_sql(
         f"scored as (select cand.query_id, cand.match_id, {cos} as cosine "
         f"  from cand join q on cand.query_id = q.query_id "
         f"  join c on cand.match_id = c.match_id), "
-        f"ranked as (select *, row_number() over (partition by query_id "
-        f"  order by cosine desc, match_id asc) as rk from scored) "
-        f"select query_id, match_id, cosine, rk from ranked where rk <= {k}"
+        + _ranked_sql(k)
     )
 
 
@@ -429,9 +428,7 @@ def lsh_topk_sql(corpus_sql: str, query_pred: str, id_col: str,
         f"c as (select {id_col} as match_id, {vec_col} from {corpus_sql}), "
         f"scored as (select query_id, match_id, {cos} as cosine "
         f"  from c join q on {bc} = {bq} where query_id != match_id), "
-        f"ranked as (select *, row_number() over (partition by query_id "
-        f"  order by cosine desc, match_id asc) as rk from scored) "
-        f"select query_id, match_id, cosine, rk from ranked where rk <= {k}"
+        + _ranked_sql(k)
     )
 
 
@@ -535,13 +532,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
                     dot_expr(F.col("qvec"), F.col("cvec")),
                     F.col("qnorm"), F.col("cnorm")).alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cosine", "rk")
-    )
+    return _rank_topk(scored, k)
 
 
 def ivf_topk_sql(corpus_sql: str, query_pred: str, id_col: str,
@@ -568,9 +559,7 @@ def ivf_topk_sql(corpus_sql: str, query_pred: str, id_col: str,
         f"  {ivf_cell_sql(vec_col, cents)} as cell from src), "
         f"scored as (select query_id, match_id, {cos} as cosine "
         f"  from c join q using (cell) where query_id != match_id), "
-        f"ranked as (select *, row_number() over (partition by query_id "
-        f"  order by cosine desc, match_id asc) as rk from scored) "
-        f"select query_id, match_id, cosine, rk from ranked where rk <= {k}"
+        + _ranked_sql(k)
     )
 
 

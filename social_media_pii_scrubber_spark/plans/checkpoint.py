@@ -50,7 +50,6 @@ def write_with_checkpoints(
     n_buckets: int = 16,
     url_col: str = "url",
     buckets_per_batch: int = 4,
-    fail_after: int | None = None,
 ) -> dict:
     """Write df partitioned by url-hash bucket, checkpointing progress.
 
@@ -59,8 +58,7 @@ def write_with_checkpoints(
     materialized frame, one write job per batch (at scale you trade job
     overhead vs blast radius). Cutting them from ``df`` itself would
     re-run its whole plan per batch: a bucket filter above ``observe()``
-    does not push down to the scan. ``fail_after`` injects a crash after
-    N batches (test hook for resume); the manifest stays the recovery
+    does not push down to the scan. The manifest stays the recovery
     path if the materialized blocks are lost.
 
     Returns {written_buckets, skipped_buckets}.
@@ -86,9 +84,7 @@ def write_with_checkpoints(
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        for batch_no, batch in enumerate(batches):
-            if fail_after is not None and batch_no >= fail_after:
-                raise RuntimeError(f"injected failure after {batch_no} batches")
+        for batch in batches:
             (
                 bucketed.filter(F.col("bucket").isin(batch))
                 .write.mode("overwrite")

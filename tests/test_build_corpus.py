@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from jobs.build_corpus import build_corpus, build_corpus_sql, run_build_corpus
 from social_media_pii_scrubber_spark.functions import encoding as ENC
+from social_media_pii_scrubber_spark.operators.hashing import MD5
 
 GOOD = ("the data pipeline reads the table and writes the result with "
         "a clean filter step so the output stays small and useful for "
@@ -52,7 +53,7 @@ def built(spark):
     # DECISION is pinned by test_classifier_gate_can_drop_all and the
     # corpus_build gate entry
     out = build_corpus(
-        _pages(spark), id_col="doc_id", oracle_profile=True,
+        _pages(spark), id_col="doc_id", family=MD5,
         classifier_bias=100.0,
         budgets={"en": 100_000, "de": 100_000},
         pack_budget=128, pack_buckets=4,
@@ -96,7 +97,7 @@ def test_shared_line_survives_only_first_occurrence(built):
 
 def test_mix_budget_zero_for_unbudgeted_stratum(spark):
     out = build_corpus(
-        _pages(spark), id_col="doc_id", oracle_profile=True,
+        _pages(spark), id_col="doc_id", family=MD5,
         classifier_bias=100.0,
         budgets={"en": 100_000},  # no 'de' budget → stratum dropped
         pack_budget=128, pack_buckets=4,
@@ -129,13 +130,13 @@ def test_fix_encoding_repairs_before_scoring(spark):
               budgets={"en": 100_000}, pack_budget=128, pack_buckets=4)
 
     repaired = build_corpus(
-        spark.createDataFrame(pdf), oracle_profile=True,
+        spark.createDataFrame(pdf), family=MD5,
         fix_encoding=True, **kw)
     row = {r["doc_id"]: r for r in repaired.collect()}[5]
     assert "café’s naïve" in row["clean_text"]
 
     raw = build_corpus(
-        spark.createDataFrame(pdf), oracle_profile=True,
+        spark.createDataFrame(pdf), family=MD5,
         fix_encoding=False, **kw)
     row_raw = {r["doc_id"]: r for r in raw.collect()}.get(5)
     assert row_raw is None or "cafÃ©" in row_raw["clean_text"]
@@ -150,7 +151,7 @@ def test_fix_encoding_repairs_before_scoring(spark):
 
 def test_classifier_gate_can_drop_all(spark):
     out = build_corpus(
-        _pages(spark), id_col="doc_id", oracle_profile=True,
+        _pages(spark), id_col="doc_id", family=MD5,
         classifier_bias=-1000.0,  # |sum| < 100 → logit < 0 everywhere
         budgets={"en": 100_000, "de": 100_000},
         pack_budget=128, pack_buckets=4,
@@ -179,17 +180,20 @@ def test_reliable_checkpoint_reaches_every_cut(spark, tmp_path, monkeypatch):
     assert want and got == want
 
 
-def test_run_build_corpus_resume_skips_done_buckets(spark, tmp_path):
+def test_run_build_corpus_resume_skips_done_buckets(spark, tmp_path,
+                                                    crash_on_mark_done):
     out_dir = str(tmp_path / "corpus")
-    kw = dict(id_col="doc_id", oracle_profile=True,
+    kw = dict(id_col="doc_id", family=MD5,
               classifier_bias=100.0,
               budgets={"en": 100_000, "de": 100_000},
               pack_budget=128, pack_buckets=4)
     wrapper = dict(n_buckets=4, buckets_per_batch=1)
     pages = _pages(spark)
+    # bucket 0 marked; bucket 1, which holds the output rows, written
+    # but not marked: the resume must replace it, not append to it
+    crash_on_mark_done(2)
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_build_corpus(spark, pages, out_dir, fail_after=2,
-                         **wrapper, **kw)
+        run_build_corpus(spark, pages, out_dir, **wrapper, **kw)
     res = run_build_corpus(spark, pages, out_dir,
                            audit_path=str(tmp_path / "audit"),
                            **wrapper, **kw)
@@ -223,10 +227,10 @@ def test_pii_density_gate_drops_contact_dump(spark):
               budgets={"en": 100_000}, pack_budget=128, pack_buckets=4)
 
     kept_open = {r["doc_id"] for r in build_corpus(
-        spark.createDataFrame(pdf), oracle_profile=True, **kw).collect()}
+        spark.createDataFrame(pdf), family=MD5, **kw).collect()}
     assert 5 in kept_open
     kept_gated = {r["doc_id"] for r in build_corpus(
-        spark.createDataFrame(pdf), oracle_profile=True,
+        spark.createDataFrame(pdf), family=MD5,
         pii_max_bp=300, **kw).collect()}
     assert 5 not in kept_gated
     assert kept_gated == kept_open - {5}  # the gate touches ONLY doc 5

@@ -1,12 +1,14 @@
 """Operator semantics: joins, pivots, dedup, similarity, media, windows."""
 
+import duckdb
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from __spark_entry__ import ORACLE_SF
 from social_media_pii_scrubber_spark.operators.dedup import (
-    exact_dedup, jaccard_pairs, lsh_candidate_pairs, simhash_signature,
+    exact_dedup, jaccard_pairs, jaccard_pairs_sql, lsh_candidate_pairs,
+    lsh_candidate_pairs_sql, simhash_signature,
 )
 from social_media_pii_scrubber_spark.operators.hashing import MD5, XXHASH64
 from social_media_pii_scrubber_spark.operators.joins import (
@@ -128,6 +130,36 @@ class TestDedup:
         assert rows[(1, 2)] == 1.0
         if (1, 3) in rows:
             assert 0 < rows[(1, 3)] < 1.0
+
+    # doc 2 = doc 1 + two words: 8 of 10 shingles shared, Jaccard exactly
+    # 4/5; doc 4 = doc 3 + two words: 6 of 8, Jaccard 3/4. The words are
+    # chosen so both pairs are LSH candidates in both families.
+    _A = " ".join(f"w0x{j}" for j in range(10))
+    _C = " ".join(f"v0x{j}" for j in range(8))
+    BOUNDARY = pd.DataFrame({"doc_id": [1, 2, 3, 4],
+                             "text": [_A, _A + " w0y0 w0y1",
+                                      _C, _C + " v0y0 v0y1"]})
+
+    @pytest.mark.parametrize("family", [MD5, XXHASH64], ids=lambda f: f.name)
+    def test_jaccard_threshold_boundary(self, spark, family):
+        """Threshold 0.8 keeps the pair at exactly 4/5 and drops the
+        pair at 3/4."""
+        docs = spark.createDataFrame(self.BOUNDARY)
+        cands = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(
+            docs, "text", "doc_id", family=family).collect()}
+        assert {(1, 2), (3, 4)} <= cands
+        got = {(r.id_a, r.id_b): r.jaccard for r in jaccard_pairs(
+            docs, "text", "doc_id", family=family).collect()}
+        assert got == {(1, 2): 0.8}
+
+    def test_jaccard_sql_threshold_boundary(self):
+        """The DuckDB twin applies the same predicate at the boundary."""
+        con = duckdb.connect()
+        con.register("docs", self.BOUNDARY)
+        cands = con.sql(lsh_candidate_pairs_sql("docs", "text", "doc_id"))
+        assert {(1, 2), (3, 4)} <= set(cands.fetchall())
+        got = con.sql(jaccard_pairs_sql("docs", "text", "doc_id")).fetchall()
+        assert got == [(1, 2, 0.8)]
 
     def test_simhash_identical_texts_match(self, spark):
         sigs = {r.doc_id: r.simhash for r in

@@ -121,17 +121,22 @@ class TestSaltedDistinct:
 
 
 class TestCheckpointResume:
-    def test_resume_after_injected_failure(self, spark, pages, tmp_path):
+    def test_resume_after_injected_failure(self, spark, pages, tmp_path,
+                                           crash_on_mark_done):
+        """The crash lands after the third batch's data is written and
+        before any of its buckets is marked done: the resume rewrites
+        those buckets, and the overwrite replaces them instead of
+        duplicating their rows."""
         out = str(tmp_path / "out")
         df = filter_scrub_pipeline(pages, CFG).df.drop("warc_ts")
         total = df.count()
 
+        crash_on_mark_done(5)  # batches 0-1 marked, batch 2 written only
         with pytest.raises(RuntimeError, match="injected failure"):
-            write_with_checkpoints(df, out, n_buckets=8, buckets_per_batch=2,
-                                   fail_after=2)
+            write_with_checkpoints(df, out, n_buckets=8, buckets_per_batch=2)
         manifest = CheckpointManifest(out)
         done_first = manifest.done_buckets()
-        assert 0 < len(done_first) < 8
+        assert len(done_first) == 4
 
         # resume: only pending buckets are recomputed
         res = write_with_checkpoints(df, out, n_buckets=8, buckets_per_batch=2)
@@ -160,7 +165,8 @@ class TestCheckpointResume:
         write_with_checkpoints(df, out, n_buckets=8, buckets_per_batch=2)
         assert seen.value == spark.read.parquet(f"{out}/data").count() > 0
 
-    def test_audit_from_output_after_resume(self, spark, pages, tmp_path):
+    def test_audit_from_output_after_resume(self, spark, pages, tmp_path,
+                                            crash_on_mark_done):
         """After a crash and a resume, the audit built from the written
         output equals the lineage of the scored frame, and the resumed
         run's Observation covers the whole window exactly once."""
@@ -170,9 +176,10 @@ class TestCheckpointResume:
 
         out, audit = str(tmp_path / "out"), str(tmp_path / "audit")
         first = filter_scrub_pipeline(pages, CFG, with_observe=True)
+        crash_on_mark_done(5)  # batch 2's data written, not marked
         with pytest.raises(RuntimeError, match="injected failure"):
             write_with_checkpoints(first.df, out, n_buckets=8,
-                                   buckets_per_batch=2, fail_after=2)
+                                   buckets_per_batch=2)
         # a restarted job builds its plan (and its Observation) afresh
         resumed = filter_scrub_pipeline(pages, CFG, with_observe=True)
         res = write_with_checkpoints(resumed.df, out, n_buckets=8,

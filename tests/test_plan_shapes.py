@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 import __spark_entry__ as E
 from social_media_pii_scrubber_spark.config import ScrubConfig
 from social_media_pii_scrubber_spark.operators.dedup import (
-    exact_dedup, lsh_candidate_pairs,
+    exact_dedup, jaccard_pairs, lsh_candidate_pairs,
 )
 from social_media_pii_scrubber_spark.operators.hashing import MD5, XXHASH64
 from social_media_pii_scrubber_spark.operators.joins import anti_join, semi_flag_join
@@ -533,3 +533,41 @@ def test_corpus_build_final_stage_reads_checkpoints(spark):
     assert names.count("Exchange") == 2, names
     scans = [n for n in names if n.startswith("Scan")]
     assert scans == ["Scan ExistingRDD"] * 2, names
+
+
+def test_quality_repetition_top_bigram_splits_once(spark):
+    """The top-bigram column let-binds its words array: the
+    ``split(trim(lower(text)))`` tree appears once in its projection,
+    not once per reference (zip_with's two arguments, the slice length,
+    the denominator, the n >= 2 guard)."""
+    df = entry(spark, "quality_repetition").select("top_bigram_frac")
+    p = plan_of(df)
+    assert p.count("split(trim(lower(") == 1, p[:3000]
+
+
+@pytest.mark.parametrize("family", [MD5, XXHASH64], ids=lambda f: f.name)
+def test_near_dup_verify_reads_candidate_checkpoint(spark, family):
+    """The verify stage reads the candidate set only as its checkpoint:
+    every LogicalRDD is the (id_a, id_b) list, read by the verify join
+    chain and by both sides of the semi prefilter's id union, and no LSH
+    band exchange or minhash aggregate is re-derived (lazy, the fan-out
+    re-ran the band join per consumer: 3.8 s → 9.9 s). Every shingle
+    projection sits above the LeftSemi prefilter, so only candidate
+    docs are shingled."""
+    d = spark.read.parquet(f"{E.ORACLE_SF}/documents.parquet") \
+        .select("doc_id", "text")
+    docs = d.unionByName(d.filter(F.col("doc_id") < 20).select(
+        (F.col("doc_id") + 100000).alias("doc_id"), "text"))
+    df = jaccard_pairs(docs, "text", "doc_id", family=family)
+    logical = df._jdf.queryExecution().optimizedPlan().toString()
+    reads = logical.count("LogicalRDD")
+    assert reads >= 3 and logical.count("LogicalRDD [id_a#") == reads, logical
+    nodes = list(final_tree(df).walk())
+    assert not [n.desc for n in nodes
+                if {"band", "bkey", "mh_0"} & set(n.cols)]
+    shingled = [n for n in nodes if n.name in ("Project", "Generate")
+                and "zip_with(" in n.desc]
+    assert shingled
+    for n in shingled:
+        assert any("Join" in m.name and "LeftSemi" in m.desc
+                   for m in n.walk()), n.desc[:300]

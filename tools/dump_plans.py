@@ -8,9 +8,11 @@ the ``$SPARK_GRAFT_SF_DIR`` tables (plan shape does not depend on row
 count) — plus the ``queries()`` entries NAME… at sf0.01, one
 ``OUT_DIR/<name>.txt`` each. The q16 corpus build and q4c's pair stage
 are also dumped with ``checkpoint=None``, so every stage shows in one
-plan instead of only the last stage over checkpointed inputs. Run it
-on two checkouts and ``diff -r`` the directories: volatile ids
-(``#N``, ``plan_id=N``, lambda variables ``x_N``, RDD ids) are
+plan instead of only the last stage over checkpointed inputs; the pair
+stage is dumped as its ``(id_a, id_b)`` projection, the columns q4c's
+components stage reads. Run it on two checkouts and ``diff -r`` the
+directories: volatile ids (``#N``, ``plan_id=N``, lambda variables
+``x_N``, RDD ids, the session-global ``_common_expr_N`` counter) are
 normalized, so only plan shape differs.
 
 The plan properties performance depends on are asserted by
@@ -39,6 +41,7 @@ def normalize(plan: str) -> str:
     plan = re.sub(r"plan_id=\d+", "plan_id=_", plan)
     plan = re.sub(r"\b([xyz])_\d+\b", r"\1_", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD[_]", plan)
+    plan = re.sub(r"_common_expr_\d+", "_common_expr__", plan)
     return re.sub(r"InMemoryFileIndex\([^)]*\)\[[^\]]*\]",
                   "InMemoryFileIndex[...]", plan)
 
@@ -59,9 +62,7 @@ def bench_frames(spark):
     from social_media_pii_scrubber_spark.operators import dsir as DSR
     from social_media_pii_scrubber_spark.operators import hosts as HST
     from social_media_pii_scrubber_spark.operators import similarity as SIM
-    from social_media_pii_scrubber_spark.operators.components import (
-        near_dup_dedup, near_dup_pairs_fast,
-    )
+    from social_media_pii_scrubber_spark.operators.components import near_dup_dedup
     from social_media_pii_scrubber_spark.operators.hashing import XXHASH64
     from social_media_pii_scrubber_spark.operators.lines import (
         c4_line_filter_expr, line_dedup,
@@ -87,8 +88,9 @@ def bench_frames(spark):
         docs, "text", "doc_id", family=XXHASH64)
     yield "q4c_near_dup_dedup", near_dup_dedup(
         docs, "text", "doc_id").filter("keep_dedup")
-    yield "q4c_near_dup_pairs", near_dup_pairs_fast(
-        docs, "text", "doc_id", checkpoint=None)
+    yield "q4c_near_dup_pairs", DD.jaccard_pairs(
+        docs, "text", "doc_id", family=XXHASH64, checkpoint=None
+    ).select("id_a", "id_b")
     lined = pages.select(
         "url", F.regexp_replace("text", r" the ", "\nthe ").alias("lined"))
     yield "q8_c4_line_filter", lined.select(
