@@ -69,9 +69,8 @@ from social_media_pii_scrubber_spark.operators import lines as LN
 from social_media_pii_scrubber_spark.operators import packing as PK
 from social_media_pii_scrubber_spark.operators import sampling as SA
 from social_media_pii_scrubber_spark.operators import components as CC
-from social_media_pii_scrubber_spark.operators.components import (
-    _cut_lineage, dedup_keep_list_sql,
-)
+from social_media_pii_scrubber_spark.operators.components import dedup_keep_list_sql
+from social_media_pii_scrubber_spark.operators.lineage import _cut_lineage
 from social_media_pii_scrubber_spark.operators.hashing import XXHASH64, HashFamily
 
 DEFAULT_BUDGETS = {"en": 50_000, "de": 20_000, "fr": 20_000, "es": 15_000}
@@ -99,7 +98,7 @@ def build_corpus(pages: DataFrame, *,
     consumed by MORE THAN ONE downstream subtree ('local' =
     localCheckpoint, the single-box default; 'reliable' = durable
     checkpoint dir, mandatory for multi-hour cluster runs — same
-    contract as operators/components.py; None = lazy stage
+    contract as operators/lineage.py; None = lazy stage
     boundaries, the pre-r07 behavior). The mode reaches s3's candidate
     list too (components.near_dup_dedup). Without
     stage cuts, Spark re-derives the whole upstream chain once per

@@ -27,27 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import jaccard_pairs
 from .hashing import XXHASH64, HashFamily
-
-
-def _cut_lineage(df: DataFrame, mode: str) -> DataFrame:
-    """Cut the iterative plan's lineage. ``local`` = executor-disk
-    localCheckpoint (fast, NOT fault-tolerant: a lost executor kills the
-    job past the cut). ``reliable`` = checkpoint to the configured
-    checkpoint dir (HDFS/S3 at cluster scale) — survives executor loss,
-    which is mandatory for a multi-hour 100-TB run."""
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "checkpoint='reliable' requires "
-                "spark.sparkContext.setCheckpointDir(<durable path>) — "
-                "refusing to default silently (a local tmp dir would not "
-                "survive executor loss, defeating the mode's purpose)")
-        return df.checkpoint(eager=True)
-    if mode != "local":
-        raise ValueError(f"checkpoint mode must be 'local' or 'reliable', got {mode!r}")
-    return df.localCheckpoint(eager=True)
+from .lineage import _cut_lineage
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
@@ -160,9 +142,6 @@ def dedup_keep_list(df: DataFrame, pairs: DataFrame, id_col: str,
 
 
 def near_dup_dedup(df: DataFrame, text_col: str, id_col: str,
-                   jaccard_threshold: float = 0.8,
-                   num_hashes: int | None = None,
-                   band_size: int | None = None,
                    checkpoint: str | None = "local", *,
                    family: HashFamily = XXHASH64) -> DataFrame:
     """The near-dup chain, end to end:
@@ -185,11 +164,8 @@ def near_dup_dedup(df: DataFrame, text_col: str, id_col: str,
     cuts its per-iteration lineage, in 'local' mode when
     ``checkpoint`` is None.
     """
-    from .dedup import jaccard_pairs
-
-    pairs = jaccard_pairs(df, text_col, id_col, jaccard_threshold,
-                          family=family, num_hashes=num_hashes,
-                          band_size=band_size, checkpoint=checkpoint)
+    pairs = jaccard_pairs(df, text_col, id_col, family=family,
+                          checkpoint=checkpoint)
     return dedup_keep_list(df, pairs, id_col, checkpoint=checkpoint or "local")
 
 

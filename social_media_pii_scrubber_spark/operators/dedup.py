@@ -27,8 +27,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import let_expr
-from .components import _cut_lineage
 from .hashing import BAND_SIZE, MD5, NUM_HASHES, HashFamily
+from .lineage import _cut_lineage
 
 SHINGLE_K = 3          # words per shingle
 
@@ -247,13 +247,11 @@ def lsh_candidate_pairs_sql(table_sql: str, text_col: str, id_col: str,
 def jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
                   threshold: float = 0.8, *,
                   family: HashFamily = MD5,
-                  num_hashes: int | None = None,
-                  band_size: int | None = None,
                   checkpoint: str | None = "local") -> DataFrame:
     """(id_a, id_b, jaccard): exact shingle Jaccard ≥ ``threshold`` over
-    the MinHash-LSH candidate pairs in ``family`` (its width unless
-    ``num_hashes`` / ``band_size`` override it). The filter reads the
-    unrounded ratio; the returned ``jaccard`` is rounded to 6 dp.
+    the MinHash-LSH candidate pairs in ``family`` at the family's width.
+    The filter reads the unrounded ratio; the returned ``jaccard`` is
+    rounded to 6 dp.
 
     The candidate list is MATERIALIZED (``checkpoint``: same
     local/reliable contract as components.connected_components; None =
@@ -267,8 +265,7 @@ def jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     candidate set grows with the corpus (never hint-broadcast); AQE
     broadcasts it when genuinely small.
     """
-    cands = lsh_candidate_pairs(df, text_col, id_col, num_hashes, band_size,
-                                family=family)
+    cands = lsh_candidate_pairs(df, text_col, id_col, family=family)
     if checkpoint:
         cands = _cut_lineage(cands, checkpoint)
     cand_ids = (cands.select(F.col("id_a").alias(id_col))

@@ -20,7 +20,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.components import _cut_lineage
+from ..operators.lineage import _cut_lineage
 from .partitioning import url_bucket_expr
 
 
