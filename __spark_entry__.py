@@ -1199,8 +1199,9 @@ def q_embedding_dup_pairs(spark, sf):
     dups = e.filter(F.col("vec_id") < 10).select(
         (F.col("vec_id") + 100000).alias("vec_id"), "embedding", "label"
     )
-    return DD.embedding_dup_pairs(
-        e.unionByName(dups), "embedding", "vec_id", threshold=0.95
+    return SIM.embedding_dup_pairs(
+        e.unionByName(dups), "embedding", "vec_id", threshold=0.95,
+        planes=SIM.COORD_PLANES,
     )
 
 
@@ -1211,7 +1212,8 @@ def q_cosine_topk(spark, sf):
 
 def q_ann_lsh_topk(spark, sf):
     e = _t(spark, sf, "embeddings")
-    return SIM.lsh_topk(e, e.filter(F.col("vec_id") < 3), "vec_id", "embedding", k=5)
+    return SIM.lsh_topk(e, e.filter(F.col("vec_id") < 3), "vec_id", "embedding", k=5,
+                        planes=SIM.COORD_PLANES)
 
 
 _EMB_WITH_DUPS_SQL = (
@@ -1539,17 +1541,17 @@ def q_semdedup_keep(spark, sf):
 def q_embedding_dup_pairs_amp(spark, sf):
     """OR-amplified near-dup pairs, expr-bucket profile (the scale path's
     oracle-checkable configuration: 2 tables of 2^6 = 64 buckets)."""
-    return SIM.embedding_dup_pairs_amplified(
+    return SIM.embedding_dup_pairs(
         _emb_with_dups(spark, sf), "embedding", "vec_id", threshold=0.95,
-        n_planes=6, n_tables=2, dim=64, use_udf=False,
+        planes=SIM.hyperplanes(6, 2, udf=False),
     )
 
 
 def q_ann_amp_topk(spark, sf):
     e = _t(spark, sf, "embeddings")
-    return SIM.ann_topk_amplified(
+    return SIM.lsh_topk(
         e, e.filter(F.col("vec_id") < 3), "vec_id", "embedding", k=5,
-        n_planes=4, n_tables=2, dim=64, use_udf=False,
+        planes=SIM.hyperplanes(4, 2, udf=False),
     )
 
 
@@ -2368,13 +2370,14 @@ def oracle_sql() -> dict[str, str]:
         ),
         "simhash": DD.simhash_signature_sql("documents", "text", "doc_id"),
         "cosine_topk": SIM.cosine_topk_sql("embeddings", "vec_id < 3", "vec_id", "embedding", k=5),
-        "embedding_dup_pairs": DD.embedding_dup_pairs_sql(
+        "embedding_dup_pairs": SIM.embedding_dup_pairs_sql(
             "(select vec_id, embedding from embeddings "
             "union all select vec_id + 100000 as vec_id, embedding "
             "from embeddings where vec_id < 10)",
-            "embedding", "vec_id", threshold=0.95,
+            "embedding", "vec_id", threshold=0.95, planes=SIM.COORD_PLANES,
         ),
-        "ann_lsh_topk": SIM.lsh_topk_sql("embeddings", "vec_id < 3", "vec_id", "embedding", k=5),
+        "ann_lsh_topk": SIM.lsh_topk_sql("embeddings", "vec_id < 3", "vec_id", "embedding", k=5,
+                                         planes=SIM.COORD_PLANES),
         "url_canonicalize": (
             "with raw as (select doc_id, 'HTTPS://Host' || cast(doc_id % 37 as varchar) "
             "|| '.Example/Doc/' || cast(doc_id as varchar) || "
@@ -2468,13 +2471,13 @@ def oracle_sql() -> dict[str, str]:
             _EMB_WITH_DUPS_SQL, "embedding", "vec_id",
             SIM.make_centroids(8, 64), threshold=0.95,
         ),
-        "embedding_dup_pairs_amp": SIM.embedding_dup_pairs_amplified_sql(
+        "embedding_dup_pairs_amp": SIM.embedding_dup_pairs_sql(
             _EMB_WITH_DUPS_SQL, "embedding", "vec_id", threshold=0.95,
-            n_planes=6, n_tables=2, dim=64,
+            planes=SIM.hyperplanes(6, 2),
         ),
-        "ann_amp_topk": SIM.ann_topk_amplified_sql(
+        "ann_amp_topk": SIM.lsh_topk_sql(
             "embeddings", "vec_id < 3", "vec_id", "embedding", k=5,
-            n_planes=4, n_tables=2, dim=64,
+            planes=SIM.hyperplanes(4, 2),
         ),
         "fb_profile_updates": _fb_profile_updates_sql(),
         "tt_user_videos": _tt_user_videos_sql(),

@@ -288,9 +288,9 @@ def main() -> None:
 
     # q6b: OR-amplified embedding near-dup (numpy-matmul bucket UDF,
     # 4 tables x 256 buckets — the at-scale ANN/dedup path)
-    timed("q6b_embedding_lsh_amplified", lambda: _count(
-        SIM.embedding_dup_pairs_amplified(
-            emb, "embedding", "vec_id", n_planes=8, n_tables=4, dim=64)))
+    timed("q6b_embedding_lsh", lambda: _count(
+        SIM.embedding_dup_pairs(
+            emb, "embedding", "vec_id", planes=SIM.hyperplanes(8, 4))))
 
     # q6c: IVF-Flat ANN, trained-shaped quantizer topology at probe=2/8
     # (cell assignment is codegen'd per-row argmax — no shuffle; the

@@ -303,55 +303,6 @@ def jaccard_pairs_sql(table_sql: str, text_col: str, id_col: str,
     )
 
 
-# --- embedding-cosine near-dup ----------------------------------------------
-
-def embedding_dup_pairs(df: DataFrame, vec_col: str, id_col: str,
-                        threshold: float = 0.95) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine ≥ threshold.
-
-    SMALL ORACLE PROFILE: uses the fixed 16-bucket coordinate-pair LSH —
-    at most 16-way parallelism, fine for the sf0.01 gate, wrong at
-    corpus scale. The at-scale variant is
-    ``similarity.embedding_dup_pairs_amplified`` (seed-derived planes,
-    2^n_planes buckets per table, OR-amplified across tables; recall
-    measured in tests/test_similarity_recall.py). Same verify-after-
-    bucket-join topology in both.
-    """
-    from .similarity import cosine_expr, lsh_bucket_expr
-
-    tagged = df.select(
-        F.col(id_col), F.col(vec_col),
-        lsh_bucket_expr(F.col(vec_col)).alias("bucket"),
-    ).repartition("bucket")
-    left = tagged.alias("l")
-    right = tagged.alias("r")
-    cos = cosine_expr(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}"))
-    return (
-        left.join(right, on="bucket")
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-def embedding_dup_pairs_sql(table_sql: str, vec_col: str, id_col: str,
-                            threshold: float = 0.95) -> str:
-    from .similarity import cosine_sql, lsh_bucket_sql
-
-    cos = cosine_sql(f"l.{vec_col}", f"r.{vec_col}")
-    bl, br = lsh_bucket_sql(f"l.{vec_col}"), lsh_bucket_sql(f"r.{vec_col}")
-    return (
-        f"select l.{id_col} as id_a, r.{id_col} as id_b, {cos} as cosine "
-        f"from {table_sql} l join {table_sql} r "
-        f"on {bl} = {br} and l.{id_col} < r.{id_col} "
-        f"where {cos} >= {threshold}"
-    )
-
-
 # --- SimHash ----------------------------------------------------------------
 
 def _token_bit_expr(token: Column, j: int) -> Column:

@@ -1,16 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers, as a real pipeline would ship them:
-
 - ``cosine_topk``: brute-force exact top-k. The query set is broadcast
   (it is small by construction); the corpus is scanned once; ranking is
   a window per query. At 100 TB of embeddings this is the baseline you
   validate the ANN path against on samples.
-- ``lsh_topk``: random-hyperplane LSH bucketing — each vector gets a
-  sign-pattern bucket from a fixed set of deterministic hyperplanes;
-  search only touches the query's bucket. The bucket column is also the
-  natural partition key, so at scale the bucket join prunes both I/O
-  (partition pruning) and compute.
+- ``lsh_topk`` / ``embedding_dup_pairs``: random-hyperplane LSH, one
+  topology each with the plane set as a value (``PlaneFamily``). Every
+  vector gets one sign-pattern bucket per table; a query searches, and
+  a pair is a candidate in, the union of its buckets across tables;
+  exact cosine ranks or verifies. Profiles: ``hyperplanes(n_planes,
+  n_tables)`` (seed-derived Gaussian planes, numpy-matmul kernel by
+  default — the scale path) and ``COORD_PLANES`` (one 16-bucket table
+  of coordinate differences, expr kernel — the small oracle profile).
+  The (tbl, bucket) key is also the natural partition key, so at scale
+  the bucket join prunes both I/O and compute.
+- ``ivf_topk`` / ``semdedup_*``: coarse-quantizer cells instead of
+  hyperplane buckets (below).
 
 All arithmetic is promoted to double before the dot product so the
 DuckDB oracle (which computes in double) matches bit-for-bit after
@@ -19,6 +24,7 @@ rounding to 4 decimals.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Iterator
 
 import pandas as pd
@@ -26,13 +32,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import ensure_min_parallelism
-
-# SMALL ORACLE PROFILE ONLY: 4 coordinate-difference hyperplanes → 16
-# buckets, trivially SQL-portable. The at-scale path is the parameterized
-# seed-derived Gaussian planes below (make_tables /
-# hyperplane_buckets_pandas_udf): n_planes·n_tables configurable, any
-# dimension, OR-amplified recall.
-LSH_PLANES: tuple[tuple[int, int], ...] = ((0, 1), (2, 3), (4, 5), (6, 7))
 
 
 def _as_double(v: Column) -> Column:
@@ -147,49 +146,6 @@ def cosine_topk_sql(corpus_sql: str, query_pred: str, id_col: str,
     )
 
 
-def lsh_bucket_expr(vec: Column) -> Column:
-    """Sign-pattern bucket from the fixed hyperplanes (string of 0/1)."""
-    v = _as_double(vec)
-    bits = [
-        F.when(v[i] - v[j] > 0, F.lit("1")).otherwise(F.lit("0"))
-        for i, j in LSH_PLANES
-    ]
-    return F.concat(*bits)
-
-
-def lsh_bucket_sql(vec: str) -> str:
-    bits = " || ".join(
-        f"(case when cast({vec}[{i + 1}] as double) - cast({vec}[{j + 1}] as double) > 0 "
-        f"then '1' else '0' end)"
-        for i, j in LSH_PLANES
-    )
-    return f"({bits})"
-
-
-def lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
-             vec_col: str, k: int = 5) -> DataFrame:
-    """ANN top-k: rank only within the query's LSH bucket.
-
-    Same output schema as cosine_topk; recall < 1.0 by construction —
-    the scale path trades exactness for touching ~1/2^n_planes of the data.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        lsh_bucket_expr(F.col(vec_col)).alias("bucket"),
-    )
-    c = ensure_min_parallelism(corpus).select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("cvec"),
-        lsh_bucket_expr(F.col(vec_col)).alias("bucket"),
-    )
-    scored = c.join(F.broadcast(q), on="bucket").select(
-        "query_id", "match_id",
-        cosine_expr(F.col("qvec"), F.col("cvec")).alias("cosine"),
-    ).filter(F.col("query_id") != F.col("match_id"))
-    return _rank_topk(scored, k)
-
-
 def make_hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     """Seed-derived Gaussian hyperplanes for any dimension.
 
@@ -207,19 +163,12 @@ def make_hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float
     ]
 
 
-def make_tables(n_planes: int, n_tables: int, dim: int,
-                seed: int = 42) -> list[list[list[float]]]:
-    """n_tables independent plane sets (OR-amplification): table t uses
-    seed+t, so adding tables never reshuffles existing ones."""
-    return [make_hyperplanes(n_planes, dim, seed + t) for t in range(n_tables)]
-
-
 def hyperplane_bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
     """Sign-pattern bucket as a BIGINT (bit j = sign of dot(v, plane_j)).
 
-    Native-expression formulation — the oracle-checkable profile. The
-    at-scale path is ``hyperplane_buckets_pandas_udf`` (one numpy matmul
-    per Arrow batch); ``test_similarity_recall`` pins their parity.
+    Native-expression kernel, the one the SQL twin mirrors. The other
+    kernel is ``hyperplane_buckets_pandas_udf`` (one numpy matmul per
+    Arrow batch); ``test_similarity_recall`` pins their parity.
     """
     v = _as_double(vec)
     acc = F.lit(0).cast("bigint")
@@ -247,7 +196,9 @@ def hyperplane_buckets_pandas_udf(tables: list[list[list[float]]]):
     100-TB path. Returns array<bigint>, one bucket id per table.
 
     The (n_rows × dim) @ (dim × n_planes·n_tables) product runs in BLAS;
-    bits pack into int64 vectorized. Zero per-row Python.
+    bits pack into int64 vectorized. Zero per-row Python. A null vector
+    is a zero row, so it lands in bucket 0 of every table, as in the
+    expr kernel and the SQL twin.
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -261,7 +212,10 @@ def hyperplane_buckets_pandas_udf(tables: list[list[list[float]]]):
     @pandas_udf("array<bigint>")
     def bucket_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for s in it:
-            m = np.vstack(s.to_numpy()).astype(np.float64)
+            present = s.notna().to_numpy()
+            m = np.zeros((len(s), mats.shape[0]))
+            if present.any():
+                m[present] = np.vstack(s[present].to_numpy())
             bits = (m @ mats) > 0                      # (n, planes*tables)
             bits = bits.reshape(len(m), n_tables, n_planes)
             buckets = (bits * weights).sum(axis=2)     # (n, tables) int64
@@ -270,43 +224,85 @@ def hyperplane_buckets_pandas_udf(tables: list[list[list[float]]]):
     return bucket_udf
 
 
+@dataclass(frozen=True)
+class PlaneFamily:
+    """The plane set one embedding-LSH topology hashes with, and its
+    bucket kernel. ``tables`` holds n_tables sets of n_planes planes
+    (OR-amplification: a pair is a candidate if it collides in ANY
+    table). ``udf`` picks the numpy-matmul kernel over the native
+    expression; both give the same buckets, and the SQL twins render
+    ``tables`` only."""
+    tables: tuple[tuple[tuple[float, ...], ...], ...]
+    udf: bool
+
+    def buckets(self, vec: Column) -> Column:
+        """array<bigint>: the vector's bucket in each table."""
+        if self.udf:
+            return hyperplane_buckets_pandas_udf(self.tables)(vec)
+        return F.array(*[hyperplane_bucket_expr(vec, p) for p in self.tables])
+
+
+def hyperplanes(n_planes: int, n_tables: int, dim: int = 64, seed: int = 42,
+                *, udf: bool = True) -> PlaneFamily:
+    """n_tables independent tables of n_planes seed-derived Gaussian
+    planes: 2^n_planes buckets per table, any dimension. Table t uses
+    seed+t, so adding tables never reshuffles existing ones."""
+    return PlaneFamily(
+        tuple(tuple(map(tuple, make_hyperplanes(n_planes, dim, seed + t)))
+              for t in range(n_tables)),
+        udf)
+
+
+# SMALL ORACLE PROFILE: one table of 4 coordinate-difference planes
+# e_i - e_j at dim 64 → 16 buckets, expr kernel. Bit j is the sign of
+# v_i - v_j: two non-zero terms, so the dot product rounds once and has
+# that sign in every engine and summation order.
+COORD_PLANES = PlaneFamily(
+    tables=(tuple(
+        tuple(float((k == i) - (k == j)) for k in range(64))
+        for i, j in ((0, 1), (2, 3), (4, 5), (6, 7))),),
+    udf=False,
+)
+
+
 def _tagged_buckets(df: DataFrame, id_col: str, vec_col: str,
-                    tables: list[list[list[float]]], use_udf: bool) -> DataFrame:
+                    planes: PlaneFamily) -> DataFrame:
     """(id, vec, tbl, bucket): one row per (row, table), exploded from a
     single per-row bucket-array computation."""
-    if use_udf:
-        arr = hyperplane_buckets_pandas_udf(tables)(F.col(vec_col))
-    else:
-        arr = F.array(*[
-            hyperplane_bucket_expr(F.col(vec_col), planes) for planes in tables
-        ])
     return df.select(
         F.col(id_col), F.col(vec_col),
-        F.posexplode(arr).alias("tbl", "bucket"),
+        F.posexplode(planes.buckets(F.col(vec_col))).alias("tbl", "bucket"),
     )
 
 
-def embedding_dup_pairs_amplified(
-    df: DataFrame, vec_col: str, id_col: str, threshold: float = 0.95,
-    n_planes: int = 8, n_tables: int = 4, dim: int = 64, seed: int = 42,
-    use_udf: bool = True,
-) -> DataFrame:
-    """OR-amplified near-duplicate pairs: candidates collide in ANY of
-    ``n_tables`` independent ``2^n_planes``-bucket tables, then exact
-    cosine verifies.
+def _tagged_buckets_sql(src: str, id_col: str, vec_col: str,
+                        planes: PlaneFamily) -> str:
+    """(id, tbl, bucket) in DuckDB: one union-all branch per table. The
+    kernel is a Spark-side choice; SQL renders the planes only."""
+    return " union all ".join(
+        f"select {id_col}, {t} as tbl, "
+        f"{hyperplane_bucket_sql(vec_col, p)} as bucket from {src}"
+        for t, p in enumerate(planes.tables)
+    )
+
+
+def embedding_dup_pairs(df: DataFrame, vec_col: str, id_col: str,
+                        threshold: float = 0.95, *,
+                        planes: PlaneFamily = hyperplanes(8, 4)) -> DataFrame:
+    """Near-duplicate pairs by embedding cosine ≥ threshold: candidates
+    collide in ANY of ``planes``' tables, then exact cosine verifies.
 
     Topology (the part that must survive 100 TB): buckets are computed
     once per row (one matmul batch), exploded to (tbl, bucket), and the
     self-join runs on that key — an explicit repartition makes both
     sides the SAME exchange (ReusedExchange). Parallelism is
-    n_tables·2^n_planes-way, not 16-way; per-bucket work is
-    O((N/2^n_planes)²) within a table. Recall amplifies as
-    1-(1-p^n_planes)^n_tables — tune n_planes to bucket size and
-    n_tables to recall; ``tests/test_similarity_recall.py`` measures it.
+    n_tables·2^n_planes-way; per-bucket work is O((N/2^n_planes)²)
+    within a table. Recall amplifies as 1-(1-p^n_planes)^n_tables — tune
+    n_planes to bucket size and n_tables to recall;
+    ``tests/test_similarity_recall.py`` measures it.
     """
-    tables = make_tables(n_planes, n_tables, dim, seed)
     df = ensure_min_parallelism(df)  # bucket matmul parallelism
-    tagged = _tagged_buckets(df, id_col, vec_col, tables, use_udf) \
+    tagged = _tagged_buckets(df, id_col, vec_col, planes) \
         .drop(vec_col).repartition("tbl", "bucket")
     left, right = tagged.alias("l"), tagged.alias("r")
     cand = (
@@ -316,11 +312,11 @@ def embedding_dup_pairs_amplified(
                 F.col(f"r.{id_col}").alias("id_b"))
         .distinct()
     )
-    # r07: norms hoisted to the per-row vecs projection, per-pair dot
-    # unrolled over the known dim (identical arithmetic; see semdedup)
+    # r07: norms hoisted to the per-row vecs projection (identical
+    # arithmetic; see semdedup)
     vecs = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v")) \
         .withColumn("_n", norm_expr(F.col("_v")))
-    verified = (
+    return (
         cand.join(vecs.select(F.col(id_col).alias("id_a"),
                               F.col("_v").alias("_va"),
                               F.col("_n").alias("_na")), "id_a")
@@ -333,24 +329,15 @@ def embedding_dup_pairs_amplified(
                     F.col("_na"), F.col("_nb")).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
-    return verified
 
 
-def embedding_dup_pairs_amplified_sql(
-    table_sql: str, vec_col: str, id_col: str, threshold: float = 0.95,
-    n_planes: int = 8, n_tables: int = 4, dim: int = 64, seed: int = 42,
-) -> str:
-    """DuckDB twin of the expr-profile amplified near-dup pairs."""
-    tables = make_tables(n_planes, n_tables, dim, seed)
-    per_table = " union all ".join(
-        f"select {id_col}, {t} as tbl, "
-        f"{hyperplane_bucket_sql(vec_col, planes)} as bucket from src"
-        for t, planes in enumerate(tables)
-    )
+def embedding_dup_pairs_sql(table_sql: str, vec_col: str, id_col: str,
+                            threshold: float = 0.95, *,
+                            planes: PlaneFamily = hyperplanes(8, 4)) -> str:
     cos = cosine_sql(f"a.{vec_col}", f"b.{vec_col}")
     return (
         f"with src as (select * from {table_sql}), "
-        f"tagged as ({per_table}), "
+        f"tagged as ({_tagged_buckets_sql('src', id_col, vec_col, planes)}), "
         f"cand as (select distinct l.{id_col} as id_a, r.{id_col} as id_b "
         f"  from tagged l join tagged r using (tbl, bucket) "
         f"  where l.{id_col} < r.{id_col}) "
@@ -361,18 +348,16 @@ def embedding_dup_pairs_amplified_sql(
     )
 
 
-def ann_topk_amplified(
-    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
-    k: int = 5, n_planes: int = 8, n_tables: int = 4, dim: int = 64,
-    seed: int = 42, use_udf: bool = True,
-) -> DataFrame:
-    """ANN top-k with OR-amplified tables: search the union of the
-    query's buckets across tables. Same output schema as cosine_topk."""
-    tables = make_tables(n_planes, n_tables, dim, seed)
-    q = _tagged_buckets(queries, id_col, vec_col, tables, use_udf) \
+def lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
+             vec_col: str, k: int = 5, *,
+             planes: PlaneFamily = hyperplanes(8, 4)) -> DataFrame:
+    """ANN top-k: rank only within the union of the query's buckets
+    across ``planes``' tables. Same output schema as cosine_topk; recall
+    < 1.0 by construction — the scale path trades exactness for touching
+    ~n_tables/2^n_planes of the data."""
+    q = _tagged_buckets(queries, id_col, vec_col, planes) \
         .withColumnRenamed(id_col, "query_id").withColumnRenamed(vec_col, "qvec")
-    c = _tagged_buckets(ensure_min_parallelism(corpus), id_col, vec_col,
-                        tables, use_udf) \
+    c = _tagged_buckets(ensure_min_parallelism(corpus), id_col, vec_col, planes) \
         .withColumnRenamed(id_col, "match_id").withColumnRenamed(vec_col, "cvec")
     cand = (
         c.join(F.broadcast(q), on=["tbl", "bucket"])
@@ -387,47 +372,21 @@ def ann_topk_amplified(
     return _rank_topk(scored, k)
 
 
-def ann_topk_amplified_sql(
-    corpus_sql: str, query_pred: str, id_col: str, vec_col: str,
-    k: int = 5, n_planes: int = 8, n_tables: int = 4, dim: int = 64,
-    seed: int = 42,
-) -> str:
-    """DuckDB twin of ``ann_topk_amplified`` (expr bucket profile)."""
-    tables = make_tables(n_planes, n_tables, dim, seed)
-
-    def tagged(src: str, idname: str) -> str:
-        return " union all ".join(
-            f"select {idname}, {vec_col}, {t} as tbl, "
-            f"{hyperplane_bucket_sql(vec_col, planes)} as bucket from {src}"
-            for t, planes in enumerate(tables)
-        )
-
+def lsh_topk_sql(corpus_sql: str, query_pred: str, id_col: str,
+                 vec_col: str, k: int = 5, *,
+                 planes: PlaneFamily = hyperplanes(8, 4)) -> str:
     cos = cosine_sql(f"q.{vec_col}", f"c.{vec_col}")
     return (
         f"with q as (select {id_col} as query_id, {vec_col} from {corpus_sql} "
         f"  where {query_pred}), "
         f"c as (select {id_col} as match_id, {vec_col} from {corpus_sql}), "
-        f"qt as ({tagged('q', 'query_id')}), "
-        f"ct as ({tagged('c', 'match_id')}), "
+        f"qt as ({_tagged_buckets_sql('q', 'query_id', vec_col, planes)}), "
+        f"ct as ({_tagged_buckets_sql('c', 'match_id', vec_col, planes)}), "
         f"cand as (select distinct query_id, match_id "
         f"  from qt join ct using (tbl, bucket) where query_id != match_id), "
         f"scored as (select cand.query_id, cand.match_id, {cos} as cosine "
         f"  from cand join q on cand.query_id = q.query_id "
         f"  join c on cand.match_id = c.match_id), "
-        + _ranked_sql(k)
-    )
-
-
-def lsh_topk_sql(corpus_sql: str, query_pred: str, id_col: str,
-                 vec_col: str, k: int = 5) -> str:
-    cos = cosine_sql(f"q.{vec_col}", f"c.{vec_col}")
-    bq = lsh_bucket_sql(f"q.{vec_col}")
-    bc = lsh_bucket_sql(f"c.{vec_col}")
-    return (
-        f"with q as (select {id_col} as query_id, {vec_col} from {corpus_sql} where {query_pred}), "
-        f"c as (select {id_col} as match_id, {vec_col} from {corpus_sql}), "
-        f"scored as (select query_id, match_id, {cos} as cosine "
-        f"  from c join q on {bc} = {bq} where query_id != match_id), "
         + _ranked_sql(k)
     )
 

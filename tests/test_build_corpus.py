@@ -22,20 +22,27 @@ BOILER = "this shared boilerplate navigation line appears on many pages."
 SOUP = "$$$ ### @!~% symbol soup junk page "
 
 
+def _uniq(i):
+    """Per-doc tokens: each doc needs >= ~8 unique tokens on top of the
+    shared GOOD body or the near-dup stage (jaccard >= 0.8) collapses
+    the whole corpus onto one doc."""
+    return " ".join(f"w{i}x{j}" for j in range(8))
+
+
 def _pages(spark):
     rows = []
     for i in range(40):
         host = i % 5
         url = f"https://Host{host}.example/p/{i}?utm_source=x"
-        text = f"{GOOD} unique marker token t{i}."
+        text = f"{GOOD} marker {_uniq(i)} t{i}."
         if i == 11:
             # canonical-url dup of page 10 (tracking params differ only)
             url = "https://host0.example/p/10?utm_campaign=y#frag"
         if i == 21:
-            text = f"{GOOD} unique marker token t20."  # exact dup of 20
+            text = f"{GOOD} marker {_uniq(20)} t20."  # exact dup of 20
         if i == 31:
-            # near-dup of 30: same long body, one trailing word changes
-            text = f"{GOOD} unique marker token t30 almost."
+            # near-dup of 30: 30's text plus one trailing word
+            text = f"{GOOD} marker {_uniq(30)} t30. almost"
         if i % 5 == 4 and i != 39:
             text = SOUP + str(i)  # host4 is mostly junk
         if i in (7, 17):
@@ -62,7 +69,8 @@ def built(spark):
 
 
 def test_schema_and_nonempty(built):
-    assert built, "composed chain produced no rows"
+    # every page survives except the planted dups and host4
+    assert set(built) == {i for i in range(40) if i % 5 != 4} - {11, 21, 31}
     row = next(iter(built.values()))
     assert set(row.asDict()) == {
         "doc_id", "canonical_url", "lang", "n_tok", "cum_tokens",
@@ -72,13 +80,13 @@ def test_schema_and_nonempty(built):
 def test_canonical_url_dedup_drops_planted_dup(built):
     # page 11 is a canonical collision with page 10 → min id (10) wins
     assert 11 not in built
-    if 10 in built:
-        assert built[10]["canonical_url"].startswith("https://host0.example/p/10")
+    assert built[10]["canonical_url"].startswith("https://host0.example/p/10")
 
 
 def test_exact_and_near_dup_drop_non_representatives(built):
     assert 21 not in built  # exact dup of 20
     assert 31 not in built  # near-dup of 30 (jaccard >= 0.8)
+    assert 20 in built and 30 in built  # the min-id representatives
 
 
 def test_bad_host_filtered_even_for_good_pages(built):
@@ -89,10 +97,8 @@ def test_bad_host_filtered_even_for_good_pages(built):
 
 
 def test_shared_line_survives_only_first_occurrence(built):
-    if 7 in built:
-        assert "boilerplate navigation" in built[7]["clean_text"]
-    if 17 in built:
-        assert "boilerplate navigation" not in built[17]["clean_text"]
+    assert "boilerplate navigation" in built[7]["clean_text"]
+    assert "boilerplate navigation" not in built[17]["clean_text"]
 
 
 def test_mix_budget_zero_for_unbudgeted_stratum(spark):
@@ -112,12 +118,6 @@ def test_fix_encoding_repairs_before_scoring(spark):
     # surviving clean_text carries the repaired characters; without
     # the flag the damage flows through untouched. The DuckDB twin
     # with the same flag agrees byte-for-byte on the repaired doc.
-    # each doc needs >= ~8 unique tokens on top of the shared GOOD
-    # body or the near-dup stage (jaccard >= 0.8) collapses the whole
-    # corpus onto doc 0
-    def _uniq(i):
-        return " ".join(f"w{i}x{j}" for j in range(8))
-
     clean5 = f"{GOOD} café’s naïve résumé summary {_uniq(5)} t5."
     pdf = pd.DataFrame(
         [(i, f"https://host{i % 5}.example/p/{i}",
@@ -189,8 +189,8 @@ def test_run_build_corpus_resume_skips_done_buckets(spark, tmp_path,
               pack_budget=128, pack_buckets=4)
     wrapper = dict(n_buckets=4, buckets_per_batch=1)
     pages = _pages(spark)
-    # bucket 0 marked; bucket 1, which holds the output rows, written
-    # but not marked: the resume must replace it, not append to it
+    # bucket 0 marked; bucket 1 written but not marked: the resume must
+    # replace it, not append to it
     crash_on_mark_done(2)
     with pytest.raises(RuntimeError, match="injected failure"):
         run_build_corpus(spark, pages, out_dir, **wrapper, **kw)
@@ -211,9 +211,6 @@ def test_pii_density_gate_drops_contact_dump(spark):
     # quality gate (it reads like text) but its PII density is way past
     # 3 hits/100 words. With pii_max_bp=300 it drops — in BOTH engines;
     # without the opt-in it survives and s9 scrubs the contacts.
-    def _uniq(i):
-        return " ".join(f"w{i}x{j}" for j in range(8))
-
     contact = (" staff contacts are ann@corp.example and bob@corp.example"
                " and cal@corp.example and dee@corp.example plus"
                " 555-123-4567 or 555-987-6543 any weekday")

@@ -19,7 +19,7 @@ from social_media_pii_scrubber_spark.operators.pivots import (
     extract_category_expr, pivot_count,
 )
 from social_media_pii_scrubber_spark.operators.similarity import (
-    cosine_topk, lsh_topk,
+    COORD_PLANES, cosine_topk, hyperplanes, lsh_topk,
 )
 from social_media_pii_scrubber_spark.operators.windows import photo_seq
 
@@ -180,11 +180,13 @@ class TestSimilarity:
     def test_lsh_subset_of_brute_candidates(self, spark, sf_dir):
         e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         q = e.filter(F.col("vec_id") == 0)
-        ann = lsh_topk(e, q, "vec_id", "embedding", k=3).collect()
-        assert 0 < len(ann) <= 3
-        # ANN cosines can't exceed the exact best
         brute_best = cosine_topk(e, q, "vec_id", "embedding", k=1).collect()[0].cosine
-        assert all(r.cosine <= brute_best for r in ann)
+        for planes in (COORD_PLANES, hyperplanes(8, 4)):
+            ann = lsh_topk(e, q, "vec_id", "embedding", k=3,
+                           planes=planes).collect()
+            assert 0 < len(ann) <= 3
+            # ANN cosines can't exceed the exact best
+            assert all(r.cosine <= brute_best for r in ann)
 
 
 class TestMedia:

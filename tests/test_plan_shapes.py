@@ -16,6 +16,7 @@ from social_media_pii_scrubber_spark.config import ScrubConfig
 from social_media_pii_scrubber_spark.operators.dedup import (
     exact_dedup, jaccard_pairs, lsh_candidate_pairs,
 )
+from social_media_pii_scrubber_spark.operators import similarity as SIM
 from social_media_pii_scrubber_spark.operators.hashing import MD5, XXHASH64
 from social_media_pii_scrubber_spark.operators.joins import anti_join, semi_flag_join
 from social_media_pii_scrubber_spark.plans.pipeline import filter_scrub_pipeline
@@ -91,28 +92,25 @@ def test_lsh_self_join_reuses_exchange(spark, sf_dir, family):
     assert "ReusedExchange" in p, p[:3000]
 
 
-def test_amplified_lsh_self_join_reuses_exchange(spark, sf_dir):
-    """The amplified embedding LSH's (tbl, bucket) self-join must reuse
-    one exchange: the bucket computation (matmul UDF) runs once total,
-    and the join key is n_tables·2^n_planes-way parallel."""
-    from social_media_pii_scrubber_spark.operators.similarity import (
-        embedding_dup_pairs_amplified,
-    )
-
+@pytest.mark.parametrize("planes", [SIM.COORD_PLANES, SIM.hyperplanes(8, 4)],
+                         ids=["coord", "gauss8x4"])
+def test_embedding_lsh_self_join_reuses_exchange(spark, sf_dir, planes):
+    """The embedding LSH's (tbl, bucket) self-join must reuse one
+    exchange in both plane profiles: the bucket computation runs once
+    total, and the join key is n_tables·2^n_planes-way parallel."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    df = embedding_dup_pairs_amplified(
-        emb, "embedding", "vec_id", n_planes=8, n_tables=4, dim=64
-    )
+    df = SIM.embedding_dup_pairs(emb, "embedding", "vec_id", planes=planes)
     df.collect()  # AQE finalizes the plan
     p = plan_of(df)
     assert "ReusedExchange" in p, p[:3000]
     assert "CartesianProduct" not in p
-    # the matmul bucket UDF must appear ONCE in the FINAL plan (reuse
-    # covers both join sides) — a second ArrowEvalPython means the
-    # buckets recompute. (toString also prints AQE's Initial Plan,
-    # where both sides legitimately still carry the UDF — cut it off.)
+    # the matmul kernel must appear ONCE in the FINAL plan (reuse covers
+    # both join sides) — a second ArrowEvalPython means the buckets
+    # recompute — and the expr kernel adds none. (toString also prints
+    # AQE's Initial Plan, where both sides legitimately still carry the
+    # UDF — cut it off.)
     final = p.split("== Initial Plan ==")[0]
-    assert final.count("ArrowEvalPython") == 1, final[:3000]
+    assert final.count("ArrowEvalPython") == int(planes.udf), final[:3000]
 
 
 def test_simhash64_partial_agg_pure_codegen(spark, sf_dir):

@@ -1,11 +1,14 @@
-"""Recall + parity for the parameterized OR-amplified hyperplane LSH.
+"""Recall + parity for the OR-amplified hyperplane LSH.
 
 VERDICT r1 flagged the fixed 16-bucket LSH as a scale-killer; the
-amplified path (similarity.make_tables + embedding_dup_pairs_amplified)
-must demonstrate recall >= 0.9 on planted near-dups with >= 256 buckets
-per table, and the vectorized pandas-UDF bucketer must agree bit-for-bit
-with the native-expression profile.
+seed-derived plane profile (similarity.hyperplanes, passed to
+embedding_dup_pairs / lsh_topk) must demonstrate recall >= 0.9 on
+planted near-dups with >= 256 buckets per table, and the vectorized
+pandas-UDF kernel must agree bit-for-bit with the native-expression
+kernel.
 """
+
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
@@ -49,26 +52,26 @@ def planted(spark):
 
 
 def test_udf_expr_bucket_parity(spark, embeddings):
-    """The numpy-matmul bucketer (scale path) must equal the native-expr
-    bucketer (oracle profile) on every row and table."""
-    tables = SIM.make_tables(N_PLANES, N_TABLES, DIM)
-    expr_arr = F.array(*[
-        SIM.hyperplane_bucket_expr(F.col("embedding"), p) for p in tables
-    ])
-    udf_arr = SIM.hyperplane_buckets_pandas_udf(tables)(F.col("embedding"))
-    mismatches = (
-        embeddings.select(expr_arr.alias("a"), udf_arr.alias("b"))
-        .filter(F.col("a") != F.col("b")).count()
-    )
-    assert mismatches == 0
+    """The numpy-matmul kernel (scale path) must equal the native-expr
+    kernel on every row and table, for both plane profiles. A null
+    vector lands in bucket 0 of every table in both kernels."""
+    null_row = spark.createDataFrame([(-1, None, 0)], embeddings.schema)
+    rows = embeddings.unionByName(null_row)
+    for planes in (SIM.COORD_PLANES, SIM.hyperplanes(N_PLANES, N_TABLES, DIM)):
+        expr_arr = replace(planes, udf=False).buckets(F.col("embedding"))
+        udf_arr = replace(planes, udf=True).buckets(F.col("embedding"))
+        got = rows.select("vec_id", expr_arr.alias("a"), udf_arr.alias("b"))
+        assert got.filter(~F.col("a").eqNullSafe(F.col("b"))).count() == 0
+        null_buckets = got.filter(F.col("vec_id") == -1).first()
+        assert null_buckets.b == [0] * len(planes.tables)
 
 
 def test_planted_neardup_recall(planted):
     """Pair recall >= 0.9 at 256 buckets/table (expected ~0.997 for
     cosine 0.995: p_table = (1 - theta/pi)^8 ~ 0.77, 4 tables)."""
-    pairs = SIM.embedding_dup_pairs_amplified(
+    pairs = SIM.embedding_dup_pairs(
         planted, "embedding", "vec_id", threshold=0.95,
-        n_planes=N_PLANES, n_tables=N_TABLES, dim=DIM,
+        planes=SIM.hyperplanes(N_PLANES, N_TABLES, DIM),
     ).collect()
     found = {(r.id_a, r.id_b) for r in pairs}
     hits = sum((i, i + 100000) in found for i in range(100))
@@ -77,13 +80,13 @@ def test_planted_neardup_recall(planted):
     assert all(r.cosine >= 0.95 for r in pairs)
 
 
-def test_ann_amplified_top1_is_planted_dup(planted):
+def test_ann_top1_is_planted_dup(planted):
     """Querying with the perturbed copies: the original vector must rank
     top-1 for >= 90% of queries."""
     queries = planted.filter(F.col("vec_id") >= 100000).limit(50)
-    out = SIM.ann_topk_amplified(
+    out = SIM.lsh_topk(
         planted, queries, "vec_id", "embedding", k=1,
-        n_planes=N_PLANES, n_tables=N_TABLES, dim=DIM,
+        planes=SIM.hyperplanes(N_PLANES, N_TABLES, DIM),
     ).collect()
     top1 = {r.query_id: r.match_id for r in out if r.rk == 1}
     ok = sum(top1.get(q + 100000) == q for q in range(100))
@@ -91,24 +94,24 @@ def test_ann_amplified_top1_is_planted_dup(planted):
     assert ok / n_queries >= 0.9, f"top-1 recall {ok}/{n_queries}"
 
 
-def test_amplified_sql_twin_matches(planted, spark):
-    """Expr profile vs the DuckDB twin on a planted frame (small
+def test_dup_pairs_sql_twin_matches(planted, spark):
+    """Expr kernel vs the DuckDB twin on a planted frame (small
     n_planes/n_tables so the rendered SQL stays manageable)."""
     import duckdb
 
     sub = planted.filter((F.col("vec_id") < 40) | (F.col("vec_id") >= 100000))
     got = sorted(
         (r.id_a, r.id_b, r.cosine)
-        for r in SIM.embedding_dup_pairs_amplified(
+        for r in SIM.embedding_dup_pairs(
             sub, "embedding", "vec_id", threshold=0.95,
-            n_planes=6, n_tables=2, dim=DIM, use_udf=False,
+            planes=SIM.hyperplanes(6, 2, DIM, udf=False),
         ).collect()
     )
     con = duckdb.connect()
     con.register("src_tbl", sub.toPandas())
-    sql = SIM.embedding_dup_pairs_amplified_sql(
+    sql = SIM.embedding_dup_pairs_sql(
         "src_tbl", "embedding", "vec_id", threshold=0.95,
-        n_planes=6, n_tables=2, dim=DIM,
+        planes=SIM.hyperplanes(6, 2, DIM),
     )
     want = sorted(
         (int(a), int(b), float(c)) for a, b, c in con.sql(sql).fetchall()
