@@ -305,11 +305,13 @@ def build_corpus_sql(pages_sql: str, *,
 
 def run_build_corpus(spark, pages: DataFrame, output_dir: str,
                      run_id: str = "run0", audit_path: str | None = None,
-                     n_buckets: int = 16, buckets_per_batch: int = 4,
+                     n_buckets: int = 16, buckets_per_batch: int | None = None,
                      **kw) -> dict:
     """Driver wrapper: composed build + checkpointed bucket-wise write
-    (resume skips done buckets) + per-bucket lineage audit rows keyed
-    by run_id (idempotent via dynamic partition overwrite)."""
+    (one file per bucket, batches packed up to the writer's row budget,
+    ``buckets_per_batch`` an optional cap on buckets per batch; resume
+    skips done buckets) + per-bucket lineage audit rows keyed by run_id
+    (idempotent via dynamic partition overwrite)."""
     from social_media_pii_scrubber_spark.plans.audit import write_audit
     from social_media_pii_scrubber_spark.plans.checkpoint import (
         write_with_checkpoints,

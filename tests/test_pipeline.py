@@ -1,11 +1,13 @@
 """Flagship pipeline + checkpoint/resume + partitioning end-to-end."""
 
 import re
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from social_media_pii_scrubber_spark.config import ScrubConfig
+from social_media_pii_scrubber_spark.plans import checkpoint as C
 from social_media_pii_scrubber_spark.plans.checkpoint import (
     CheckpointManifest, write_with_checkpoints,
 )
@@ -120,31 +122,117 @@ class TestSaltedDistinct:
         assert salted == direct  # exact, not approximate
 
 
+def _skewed_urls(spark, n=400, hot=200):
+    """``n`` rows in 4 partitions; the first ``hot`` share one url, so
+    one url bucket holds at least ``hot`` rows."""
+    url = F.when(F.col("id") < hot, F.lit("https://hot.example/")) \
+        .otherwise(F.concat(F.lit("https://u.example/"), F.col("id").cast("string")))
+    return spark.range(n).select(url.alias("url"), "id").repartition(4)
+
+
+@pytest.fixture
+def parquet_writes(monkeypatch):
+    """Spy on ``DataFrameWriter.parquet``: one ``{bucket: rows}`` dict
+    per call, counted from the frame each call writes."""
+    from pyspark.sql import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+    calls = []
+
+    def parquet(self, path, *args, **kwargs):
+        calls.append({r["bucket"]: r["count"] for r in
+                      self._df.groupBy("bucket").count().collect()})
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    return calls
+
+
+def _files_per_bucket(out):
+    return {d.name: len(list(d.glob("*.parquet")))
+            for d in Path(out, "data").glob("bucket=*")}
+
+
 class TestCheckpointResume:
+    @pytest.mark.parametrize("cap, budget_share", [(2, None), (None, 4)],
+                             ids=["buckets_per_batch", "batch_rows"])
     def test_resume_after_injected_failure(self, spark, pages, tmp_path,
-                                           crash_on_mark_done):
+                                           monkeypatch, crash_on_mark_done,
+                                           cap, budget_share):
         """The crash lands after the third batch's data is written and
         before any of its buckets is marked done: the resume rewrites
         those buckets, and the overwrite replaces them instead of
-        duplicating their rows."""
+        duplicating their rows. Batches are cut either by the bucket
+        cap or, with no cap, by a row budget of 1/``budget_share`` of
+        the rows. The crashed call leaves the session's overwrite mode
+        as it found it."""
         out = str(tmp_path / "out")
         df = filter_scrub_pipeline(pages, CFG).df.drop("warc_ts")
         total = df.count()
+        if budget_share:
+            monkeypatch.setattr(C, "BATCH_ROWS", total // budget_share)
 
-        crash_on_mark_done(5)  # batches 0-1 marked, batch 2 written only
+        batches = []
+        real_pack = C._pack_batches
+
+        def pack(*args):
+            packed = real_pack(*args)
+            if not batches:  # arm on the first call only, not the resume
+                batches.extend(packed)
+                # batches 0-1 marked, batch 2 written only
+                crash_on_mark_done(len(batches[0]) + len(batches[1]) + 1)
+            return packed
+
+        monkeypatch.setattr(C, "_pack_batches", pack)
+        mode_key = "spark.sql.sources.partitionOverwriteMode"
+        mode = spark.conf.get(mode_key)
         with pytest.raises(RuntimeError, match="injected failure"):
-            write_with_checkpoints(df, out, n_buckets=8, buckets_per_batch=2)
+            write_with_checkpoints(df, out, n_buckets=8, buckets_per_batch=cap)
+        assert spark.conf.get(mode_key) == mode
+        if cap:
+            assert batches == [[0, 1], [2, 3], [4, 5], [6, 7]]
+        else:
+            assert len(batches) >= 3 and any(len(b) > 1 for b in batches)
         manifest = CheckpointManifest(out)
         done_first = manifest.done_buckets()
-        assert len(done_first) == 4
+        assert done_first == set(batches[0] + batches[1])
 
         # resume: only pending buckets are recomputed
-        res = write_with_checkpoints(df, out, n_buckets=8, buckets_per_batch=2)
+        res = write_with_checkpoints(df, out, n_buckets=8, buckets_per_batch=cap)
         assert sorted(res["skipped_buckets"]) == sorted(done_first)
         assert set(res["written_buckets"]) == set(range(8)) - done_first
 
         got = spark.read.parquet(f"{out}/data").count()
         assert got == total  # no loss, no duplication
+
+    def test_default_writes_one_batch_one_file_per_bucket(
+            self, spark, tmp_path, parquet_writes):
+        """With default arguments a small frame is written by one write
+        job, and each bucket directory holds one parquet file even when
+        the frame arrives in several partitions."""
+        out = str(tmp_path / "out")
+        df = _skewed_urls(spark)
+        res = write_with_checkpoints(df, out, n_buckets=8)
+        assert res["written_buckets"] == list(range(8))
+        assert len(parquet_writes) == 1
+        files = _files_per_bucket(out)
+        assert files and set(files.values()) == {1}, files
+        assert spark.read.parquet(f"{out}/data").count() == 400
+
+    def test_bucket_over_row_budget_gets_own_batch(
+            self, spark, tmp_path, monkeypatch, parquet_writes):
+        """A bucket over ``BATCH_ROWS`` is written alone; the others are
+        packed together up to the budget."""
+        monkeypatch.setattr(C, "BATCH_ROWS", 100)
+        out = str(tmp_path / "out")
+        write_with_checkpoints(_skewed_urls(spark), out, n_buckets=8)
+        hot = [c for c in parquet_writes if max(c.values(), default=0) > 100]
+        assert len(hot) == 1 and len(hot[0]) == 1, parquet_writes
+        for c in parquet_writes:
+            assert len(c) == 1 or sum(c.values()) <= 100, parquet_writes
+        assert any(len(c) > 1 for c in parquet_writes), parquet_writes
+        assert spark.read.parquet(f"{out}/data").count() == 400
+        assert set(_files_per_bucket(out).values()) == {1}
 
     def test_batches_run_the_pipeline_once(self, spark, pages, tmp_path):
         """The bucket batches are cut from one materialized pass: a UDF

@@ -533,6 +533,49 @@ def test_corpus_build_final_stage_reads_checkpoints(spark):
     assert scans == ["Scan ExistingRDD"] * 2, names
 
 
+def test_checkpointed_writer_one_bucket_exchange_then_checkpoint_reads(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """The writer's materialization adds exactly one Exchange above the
+    pipeline, partitioned on ``bucket`` (one file per bucket), and every
+    batch's write plan reads only the checkpoint (``Scan ExistingRDD``),
+    with no Exchange: no batch re-derives the pipeline."""
+    from pyspark.sql import DataFrameWriter
+
+    from social_media_pii_scrubber_spark.plans import checkpoint as C
+
+    cut, written = [], []
+    real_cut, real_parquet = C._cut_lineage, DataFrameWriter.parquet
+
+    def spy_cut(df, mode):
+        cut.append(df)
+        return real_cut(df, mode)
+
+    def spy_parquet(self, path, *args, **kwargs):
+        written.append(self._df)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(C, "_cut_lineage", spy_cut)
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_parquet)
+    pages = webpages_from_documents(spark, sf_dir)
+    df = filter_scrub_pipeline(pages, CFG).df
+    C.write_with_checkpoints(df, str(tmp_path / "out"), n_buckets=8,
+                             buckets_per_batch=4)
+
+    def exchanges(root):
+        return [n for n in root.walk() if n.name == "Exchange"]
+
+    (mat,) = cut  # already executed by the checkpoint: AQE's final plan
+    added = exchanges(tree_of(mat))
+    assert len(added) == len(exchanges(final_tree(df))) + 1
+    assert "hashpartitioning(bucket" in added[0].desc, added[0].desc
+    assert len(written) == 2
+    for w in written:
+        names = [n.name for n in tree_of(w).walk()]
+        assert [n for n in names if n.startswith("Scan")] \
+            == ["Scan ExistingRDD"], names
+        assert "Exchange" not in names, names
+
+
 def test_quality_repetition_top_bigram_splits_once(spark):
     """The top-bigram column let-binds its words array: the
     ``split(trim(lower(text)))`` tree appears once in its projection,
